@@ -166,19 +166,21 @@ def _exploded_shingles(
         F.col(id_col).alias("_vid"), F.posexplode(toks).alias("_pos", "_tok")
     )
     if n == 1:
-        return base.select("_vid", F.col("_tok").alias("_s"))
-    w = Window.partitionBy("_vid").orderBy("_pos")
-    parts = [F.col("_tok")] + [F.lead("_tok", k).over(w) for k in range(1, n)]
-    with_lead = base.select(
+        return base.selectExpr("_vid", "_tok AS _s")
+    # expression strings, here and in the other plan builders of this
+    # module: one parse per projection instead of ~10 py4j calls per
+    # Column object, for the same plan
+    w = "OVER (PARTITION BY _vid ORDER BY _pos)"
+    leads = ", ".join(f"lead(_tok, {k}) {w}" for k in range(1, n))
+    full = base.selectExpr(
         "_vid",
-        F.concat_ws(" ", *parts).alias("_s"),
-        F.lead("_tok", n - 1).over(w).alias("_last"),
-    )
-    full = with_lead.where(F.col("_last").isNotNull()).select("_vid", "_s")
+        f"concat_ws(' ', _tok, {leads}) AS _s",
+        f"lead(_tok, {n - 1}) {w} AS _last",
+    ).where("_last IS NOT NULL").select("_vid", "_s")
     short = (
         df.select(F.col(id_col).alias("_vid"), toks.alias("_t"))
-        .where(F.size("_t") < n)
-        .select("_vid", F.concat_ws(" ", "_t").alias("_s"))
+        .where(f"size(_t) < {n}")
+        .selectExpr("_vid", "concat_ws(' ', _t) AS _s")
     )
     return full.unionByName(short)
 
@@ -229,11 +231,11 @@ def _bucket_pairs(
     """
     grouped = (
         skinny.groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_list(payload)).alias("_ids"))
-        .where(F.size("_ids") >= 2)
+        .agg(F.expr(f"array_sort(collect_list({payload})) AS _ids"))
+        .where("size(_ids) >= 2")
     )
     if max_bucket_size is not None:
-        grouped = grouped.where(F.size("_ids") <= max_bucket_size)
+        grouped = grouped.where(f"size(_ids) <= {max_bucket_size}")
     # ids are strictly ordered (unique id in every payload shape), so
     # "all b > a" ≡ "the sorted suffix past a's position": explode with
     # position, slice the suffix, explode the slice.
@@ -241,17 +243,12 @@ def _bucket_pairs(
     # buckets are disjoint id sets (e.g. one bucket per text fingerprint)
     # — there a pair can only be emitted once and the distinct would
     # shuffle the full quadratic pair stream for nothing.
-    pairs = grouped.select(
-        F.col("_ids"), F.posexplode(F.col("_ids")).alias("_i", "id_a")
-    ).select(
-        F.col("id_a"),
-        F.explode(
-            F.slice(
-                F.col("_ids"),
-                F.col("_i") + F.lit(2),  # slice() is 1-based; skip self
-                F.size(F.col("_ids")) - F.col("_i") - F.lit(1),
-            )
-        ).alias("id_b"),
+    pairs = grouped.selectExpr(
+        "_ids", "posexplode(_ids) AS (_i, id_a)"
+    ).selectExpr(
+        "id_a",
+        # slice() is 1-based; + 2 skips self
+        "explode(slice(_ids, _i + 2, size(_ids) - _i - 1)) AS id_b",
     )
     return pairs.distinct() if distinct else pairs
 
@@ -341,9 +338,7 @@ def _minhash_signatures(
     params = _minhash_params(num_hashes, seed)
     # no distinct: min() is duplicate-invariant
     exploded = _exploded_shingles(df, id_col, text_col, shingle_size)
-    hashed = exploded.select(
-        "_vid", F.pmod(F.xxhash64(F.col("_s")), F.lit(_P)).alias("_hb")
-    )
+    hashed = exploded.selectExpr("_vid", f"pmod(xxhash64(_s), {_P}) AS _hb")
     # ONE parsed expression for all num_hashes min-aggregates: building
     # them as individual Column objects cost ~8 py4j round-trips each
     # (~2 s of driver-side latency for 128 hashes — the dominant COLD
@@ -352,7 +347,7 @@ def _minhash_signatures(
     # a*_hb + b stays < 2^62 (a, b, _hb all < 2^31), no overflow.
     arr = ",".join(f"min(pmod({a}L * _hb + {b}L, {_P}L))" for a, b in params)
     agg = hashed.groupBy("_vid").agg(F.expr(f"array({arr})").alias("minhash"))
-    return agg.select(F.col("_vid").alias("_mh_id"), "minhash")
+    return agg.selectExpr("_vid AS _mh_id", "minhash")
 
 
 def with_minhash_signature(
@@ -457,13 +452,16 @@ def minhash_near_dup_pairs(
     sig = _minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_size, seed
     ).withColumnRenamed("_mh_id", "_id")
-    band_keys = F.array(
-        *[
-            F.hash(F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band))
-            for b in range(bands)
-        ]
+    # one parsed expression for all band keys, as for the min-hash
+    # aggregates: 16 Column trees cost ~530 py4j calls to build, the
+    # string ~30, for the identical plan
+    band_keys = ",".join(
+        f"hash(slice(minhash, {b * rows_per_band + 1}, {rows_per_band}))"
+        for b in range(bands)
     )
-    skinny = sig.select("_id", F.posexplode(band_keys).alias("band_idx", "band_hash"))
+    skinny = sig.selectExpr(
+        "_id", f"posexplode(array({band_keys})) AS (band_idx, band_hash)"
+    )
     candidates = _bucket_pairs(
         skinny, ["band_idx", "band_hash"], max_bucket_size=max_bucket_size
     )
@@ -548,7 +546,7 @@ def _verify_jaccard(
     # corpus this trades a minor SMJ-vs-broadcast penalty (measured
     # ~0.3 s at sf0.1) for guaranteed OOM-safety at every scale.
     ex = _exploded_shingles(ex_src, id_col, text_col, n).distinct().persist()
-    sizes = ex.groupBy("_vid").agg(F.count(F.lit(1)).alias("_n"))
+    sizes = ex.groupBy("_vid").agg(F.expr("count(1) AS _n"))
 
     def _score(key_pairs: DataFrame) -> DataFrame:
         """Exact Jaccard for ``(id_a, id_b)`` rows whose ids key ``ex``
@@ -556,31 +554,28 @@ def _verify_jaccard(
         also reaches its aggregate consumer, where it warns and does
         nothing)."""
         pa = key_pairs.join(
-            ex.select(F.col("_vid").alias("_ida"), F.col("_s")).hint("merge"),
-            F.col("id_a") == F.col("_ida"),
+            ex.selectExpr("_vid AS _ida", "_s").hint("merge"),
+            F.expr("id_a = _ida"),
         ).select("id_a", "id_b", "_s")
         inter = (
             pa.join(
-                ex.select(
-                    F.col("_vid").alias("_idb"), F.col("_s").alias("_sb")
-                ).hint("merge"),
-                (F.col("id_b") == F.col("_idb")) & (F.col("_s") == F.col("_sb")),
+                ex.selectExpr("_vid AS _idb", "_s AS _sb").hint("merge"),
+                F.expr("id_b = _idb AND _s = _sb"),
             )
             .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("_inter"))
+            .agg(F.expr("count(1) AS _inter"))
         )
+        # jaccard: round4's cross-engine rounding, as an expression string
         return (
             key_pairs.join(inter, ["id_a", "id_b"], "left")
-            .withColumn("_inter", F.coalesce(F.col("_inter"), F.lit(0)))
-            .join(sizes.select(F.col("_vid").alias("id_a"), F.col("_n").alias("_na")), "id_a")
-            .join(sizes.select(F.col("_vid").alias("id_b"), F.col("_n").alias("_nb")), "id_b")
-            .select(
+            .selectExpr("id_a", "id_b", "coalesce(_inter, 0) AS _inter")
+            .join(sizes.selectExpr("_vid AS id_a", "_n AS _na"), "id_a")
+            .join(sizes.selectExpr("_vid AS id_b", "_n AS _nb"), "id_b")
+            .selectExpr(
                 "id_a",
                 "id_b",
-                round4(
-                    F.col("_inter").cast("double")
-                    / (F.col("_na") + F.col("_nb") - F.col("_inter"))
-                ).alias("jaccard"),
+                "round(CAST(_inter AS DOUBLE) / (_na + _nb - _inter) * 10000)"
+                " / 10000 AS jaccard",
             )
         )
 
@@ -668,74 +663,71 @@ def _verify_jaccard(
     return out
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 15,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over near-duplicate ``(id_a, id_b)`` edges:
     returns ``(id, component)`` with ``component`` = the smallest id
     reachable from ``id`` — the canonical representative of each
-    duplicate cluster.
+    duplicate cluster. Ids keep their type from ``pairs``; an edge with
+    a NULL end is ignored; no edges give an empty frame.
 
-    Iterative min-label propagation (the map-reduce CC algorithm): each
-    round every vertex adopts the minimum label among itself and its
-    neighbors; convergence is checked with an aggregate count of changed
-    labels (a driver-side scalar per round, not a data collect). Rounds
-    needed = graph diameter — near-dup clusters are near-cliques, so
-    this converges in 2–3 rounds in practice; ``max_iter`` bounds
-    pathological chains. ``localCheckpoint`` truncates the growing plan
-    lineage each round (the standard treatment for iterative DataFrame
-    algorithms; at cluster scale use ``checkpoint`` on fault-tolerant
-    storage instead).
+    One Spark action: the edges are collected once as Arrow and labelled
+    on the driver by a vectorised union-find (:func:`_min_root_labels`),
+    exact for any graph diameter — long chains included. Bound: the
+    verified edge list must fit in driver memory — about 16 bytes per
+    edge for ``bigint`` ids as collected, a few times that while the
+    labelling runs. Near-dup edge lists are small next to the corpus
+    (verified pairs, not candidates), which is what makes one collect
+    cheaper than a Spark job per propagation round.
     """
-    edges = (
-        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("a"), F.col("id_a").alias("b"))
-        )
-        .distinct()
-        # eager=False: materialization folds into round 1's own job
-        # instead of running a separate checkpoint job up front — the
-        # lineage truncation (the reason for the checkpoint) happens at
-        # first use either way (round 10, job-count cut measured with
-        # the per-round checkpoint below)
-        .localCheckpoint(eager=False)
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField, StructType
+
+    typ = pairs.schema["id_a"].dataType
+    schema = StructType(
+        [StructField("id", typ), StructField("component", typ)]
     )
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
+    tbl = pairs.select("id_a", "id_b").toArrow().drop_null()
+    ends = pa.concat_arrays(
+        [tbl.column("id_a").combine_chunks(), tbl.column("id_b").combine_chunks()]
     )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["b"] == labels["id"])
-            .groupBy("a")
-            .agg(F.min("component").alias("_nmin"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["a"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_nmin"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("_nmin"), F.col("component")) < F.col("component"))
-                .cast("int")
-                .alias("_chg"),
-            )
-            # eager=False: the convergence-check collect right below is
-            # the round's ONE action — it materializes the checkpoint
-            # and computes the changed-count in the same job, instead of
-            # one eager checkpoint job + one aggregate job per round
-            # (measured: x08 10 → 7 jobs at sf0.1; labels still reads
-            # the truncated-lineage checkpoint blocks afterwards)
-            .localCheckpoint(eager=False)
-        )
-        changed = updated.agg(F.sum("_chg")).collect()[0][0] or 0
-        labels = updated.drop("_chg")
-        if changed == 0:
-            break
-    return labels
+    # sorted distinct ids: a vertex index orders like its id, so the
+    # smallest index in a component is the smallest id
+    ids = pc.unique(ends)
+    ids = ids.take(pc.sort_indices(ids))
+    ends_idx = pc.index_in(ends, value_set=ids).to_numpy()
+    m = tbl.num_rows
+    root = _min_root_labels(len(ids), ends_idx[:m], ends_idx[m:])
+    out = pa.table({"id": ids, "component": ids.take(root)})
+    return pairs.sparkSession.createDataFrame(out, schema)
+
+
+def _min_root_labels(n: int, u, v):
+    """Union-find over ``n`` vertices and edges ``u[i] — v[i]`` (numpy
+    index arrays): returns each vertex's component root, the smallest
+    vertex index of its component.
+
+    Vectorised hook-and-compress: every round hooks each edge's larger
+    root under the smaller one (``parent[x] <= x`` always holds, so no
+    cycle can form), then pointer-jumps until every vertex points at a
+    root. A round hooks at least one root of every unfinished component,
+    so the loop ends; on a chain the root count at least halves per
+    round. Each round is O(edges) in numpy.
+    """
+    import numpy as np
+
+    parent = np.arange(n)
+    while True:
+        pu, pv = parent[u], parent[v]
+        lo, hi = np.minimum(pu, pv), np.maximum(pu, pv)
+        if (lo == hi).all():
+            return parent
+        np.minimum.at(parent, hi, lo)
+        while True:
+            jumped = parent[parent]
+            if (jumped == parent).all():
+                break
+            parent = jumped
 
 
 def dedup_clusters(
@@ -775,8 +767,13 @@ def dedup_clusters(
     The non-default policies add one window over the (tiny) clustered
     subset — singleton documents never enter the window.
 
+    Components come from :func:`connected_components` on both routes,
+    so the verified edge list (direct route) or its contraction to one
+    vertex per distinct text (collapse route) must fit in driver memory,
+    about 16 bytes per edge for ``bigint`` ids.
+
     ``dedup_collapse`` (round 10, measured auto route): contract every
-    exact-duplicate text group to one vertex before the iterative CC —
+    exact-duplicate text group to one vertex before the components —
     see the inline comment for the exactness argument. The route treats
     same-text rows as one cluster member set, which is guaranteed only
     for pair lists that include every same-text pair. The internal
@@ -794,16 +791,17 @@ def dedup_clusters(
         pairs = minhash_near_dup_pairs(
             df, id_col, text_col, num_hashes, bands, shingle_size, threshold, seed
         )
-    # Duplicate collapse (round 10, measured auto route): run the
-    # iterative CC on the QUOTIENT graph. On a replica-heavy corpus the
+    # Duplicate collapse (round 10, measured auto route): label the
+    # components of the QUOTIENT graph. On a replica-heavy corpus the
     # id-level pair list is dominated by same-text cliques (C(m,2) edges
     # per m-replica text); contracting every text group to one vertex
     # (its min-id representative) before CC is exact, because a member's
     # component is its group's component and the min reachable id equals
     # the min over the component's groups of each group's min id — which
-    # is exactly what CC over rep vertices (labels start at the rep id =
-    # group min id) computes. Three skinny integer joins replace
-    # O(diameter) iterative joins over the clique-expanded edge list.
+    # is exactly what CC over rep vertices (each labelled by its rep id =
+    # group min id) computes. Three skinny integer joins shrink the
+    # clique-expanded edge list the driver collects to one edge per
+    # distinct text pair.
     # Requires ``pairs`` to reference ids of non-NULL-text rows of
     # ``df`` (true for every internal pair generator; NULL-text ids
     # never produce shingles or signatures).
@@ -838,16 +836,14 @@ def dedup_clusters(
         )
     else:
         comp = connected_components(pairs.select("id_a", "id_b"))
-    all_ids = df.select(F.col(id_col).alias("id")).distinct()
-    labeled = (
-        all_ids.join(comp, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("id")).alias("component"),
-        )
+    all_ids = df.selectExpr(f"{id_col} AS id").distinct()
+    labeled = all_ids.join(comp, "id", "left").selectExpr(
+        f"id AS {id_col}", "coalesce(component, id) AS component"
     )
     if keep == "min_id":
-        return labeled.withColumn("keep", F.col("component") == F.col(id_col))
+        return labeled.selectExpr(
+            id_col, "component", f"component = {id_col} AS keep"
+        )
     order = {
         "longest": [F.length(F.col(text_col)).desc(), F.col(id_col).asc()],
         "max_quality": [

@@ -491,10 +491,10 @@ def l15(spark: SparkSession, sf: str) -> DataFrame:
 
 @_q(
     "x08_dedup_clusters",
-    None,  # iterative (connected components over LSH pairs) — not
+    None,  # graph labelling (connected components over LSH pairs) — not
     # SQL-expressible; planted-cluster properties in tests/test_llm.py
-    "near-dup clustering (§2B-16): MinHash-LSH pairs -> iterative "
-    "min-label connected components -> one canonical doc per cluster",
+    "near-dup clustering (§2B-16): MinHash-LSH pairs -> driver-side "
+    "union-find connected components -> one canonical doc per cluster",
 )
 def l16(spark: SparkSession, sf: str) -> DataFrame:
     from gcpde_spark.llm.dedup import dedup_clusters

@@ -900,9 +900,13 @@ class TableStore:
         return self._action_with_timeout(df.collect, timeout)
 
     def _action_with_timeout(self, action, timeout: float):
-        """Run any job-launching action under a cancelJobGroup watchdog."""
+        """Run any job-launching action under a cancelJobGroup watchdog.
+
+        The watchdog needs its own job group; the caller's group,
+        description and interrupt flag are restored afterwards."""
         sc = self.spark.sparkContext
         group = f"gcpde-q-{uuid.uuid4().hex[:8]}"
+        saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
         timed_out = threading.Event()
 
         def _cancel() -> None:
@@ -920,7 +924,16 @@ class TableStore:
             raise
         finally:
             timer.cancel()
-            sc.setJobGroup("", "")
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+
+
+# the local properties ``SparkContext.setJobGroup`` sets
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
 
 
 def _zorder_proxy(field) -> F.Column:

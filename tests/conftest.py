@@ -30,15 +30,24 @@ TABLES = [
 ]
 
 
+def _driver_memory() -> str:
+    """A quarter of the machine's RAM, read from ``/proc/meminfo``."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{total_kb // 4 // 1024}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
+    # one task slot per core the run is given (SPARK_GRAFT_CPUS, else
+    # all cores); the shuffle partition count stays fixed at 8 because
+    # plan-shape tests assert it
     spark = build_session(
         app_name="gcpde_spark_tests",
-        master="local[8]",
         shuffle_partitions=8,
         extra_confs={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "8g",
+            "spark.driver.memory": _driver_memory(),
         },
     )
     yield spark

@@ -66,6 +66,35 @@ def test_paginated_facade(engine):
     assert [r["id"] for r in records] == [0, 1] and token is not None
 
 
+def test_timeout_watchdog_restores_the_callers_job_group(engine, spark):
+    """The watchdog's own job group must not outlive the call: a group
+    the caller set is back afterwards, and an unset group stays unset."""
+    sc = spark.sparkContext
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    sc.setJobGroup("caller-group", "caller work", interruptOnCancel=True)
+    try:
+        assert engine.select("SELECT 2 AS n") == [{"n": 2}]
+        records, token = engine.select_paginated(
+            "SELECT id FROM range(5) ORDER BY id", 2
+        )
+        assert [r["id"] for r in records] == [0, 1]
+        engine.select_paginated("SELECT id FROM range(5) ORDER BY id", 2, token)
+        assert [sc.getLocalProperty(p) for p in props] == [
+            "caller-group",
+            "caller work",
+            "true",
+        ]
+    finally:
+        for p in props:
+            sc.setLocalProperty(p, None)
+    engine.select("SELECT 3 AS n")
+    assert [sc.getLocalProperty(p) for p in props] == [None, None, None]
+
+
 def test_engine_txn_facade(spark, tmp_path):
     """engine.txn / engine.use_txn_backend: the transactional layer
     through the facade — upserts route to file-pruned MERGE and the

@@ -922,6 +922,82 @@ def test_connected_components_chains_and_cliques(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
+def test_connected_components_labels_a_long_chain_exactly(spark):
+    """A 40-node path is one component labelled by its smallest id —
+    however many hops the label has to travel (iterative min-label
+    propagation capped at 15 rounds left node 40 labelled 25)."""
+    from gcpde_spark.llm.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], "id_a long, id_b long"
+    )
+    got = {r.id: r.component for r in connected_components(pairs).collect()}
+    assert got == {i: 1 for i in range(1, 41)}
+
+
+def test_connected_components_empty_edges_keep_the_schema(spark):
+    from gcpde_spark.llm.dedup import connected_components
+
+    pairs = spark.createDataFrame([], "id_a string, id_b string")
+    out = connected_components(pairs)
+    assert out.schema.simpleString() == "struct<id:string,component:string>"
+    assert out.collect() == []
+
+
+def _bfs_components(edges):
+    """Pure-Python reference: each vertex's smallest reachable id."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    comp = {}
+    for start in adj:
+        if start in comp:
+            continue
+        seen, todo = {start}, [start]
+        while todo:
+            for nxt in adj[todo.pop()] - seen:
+                seen.add(nxt)
+                todo.append(nxt)
+        comp.update(dict.fromkeys(seen, min(seen)))
+    return comp
+
+
+def test_connected_components_match_bfs_on_random_graphs(spark):
+    """Hypothesis differential against BFS: random graphs with edges in
+    both directions, duplicate edges, self-loops, and integer or
+    (non-ASCII) string ids, whose order must be the reference's."""
+    from hypothesis import given, settings, strategies as st
+
+    from gcpde_spark.llm.dedup import connected_components
+
+    ints = st.integers(-5, 30)
+    strs = st.text(alphabet="abZé€😀", min_size=1, max_size=3)
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        st.one_of(
+            st.lists(st.tuples(ints, ints), max_size=40).map(
+                lambda e: ("bigint", e)
+            ),
+            st.lists(st.tuples(strs, strs), max_size=40).map(
+                lambda e: ("string", e)
+            ),
+        )
+    )
+    def run(case):
+        typ, edges = case
+        pairs = spark.createDataFrame(edges, f"id_a {typ}, id_b {typ}")
+        out = connected_components(pairs)
+        assert out.schema.simpleString() == f"struct<id:{typ},component:{typ}>"
+        rows = out.collect()
+        got = {r.id: r.component for r in rows}
+        assert len(got) == len(rows)
+        assert got == _bfs_components(edges)
+
+    run()
+
+
 def test_dedup_clusters_keeps_one_per_duplicate_group(docs):
     from gcpde_spark.llm.dedup import dedup_clusters
 

@@ -4,6 +4,7 @@ layout, windowed aggregations, watermark dedup, exactly-once file sink."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -149,7 +150,17 @@ def test_stateful_running_counts(spark, event_dataset):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # the processing-time timeout makes Spark follow every batch with a
+    # no-data batch (to fire timeouts), so this availableNow query never
+    # terminates by itself: the first no-data batch means the input is
+    # consumed, and the query is stopped so it does not outlive the test
+    deadline = time.monotonic() + 120
+    try:
+        while not any(p["numInputRows"] == 0 for p in q.recentProgress):
+            assert time.monotonic() < deadline, "stream never drained its input"
+            time.sleep(0.5)
+    finally:
+        q.stop()
     # "update" mode may emit a row per micro-batch per key; the LAST
     # emission per key carries the final running total
     got = {
