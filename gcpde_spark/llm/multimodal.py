@@ -1077,11 +1077,13 @@ def _attach_struct(
     key = "_meta"
     while key in df.columns:
         key = "_" + key
+    # the original columns stay as they are (no select by name: a column
+    # named "a.b" would re-parse as a nested field); only the struct's
+    # fields are added and the tag dropped
     tagged = df.withColumn(key, udf(*[F.col(c) for c in in_cols]))
-    return tagged.select(
-        *df.columns,
-        *[F.col(key)[f.name].alias(f.name) for f in fields],
-    )
+    return tagged.withColumns(
+        {f.name: F.col(key)[f.name] for f in fields}
+    ).drop(key)
 
 
 def video_codec_info(df: DataFrame) -> DataFrame:

@@ -103,10 +103,12 @@ def sessionize(
     order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in tie_break]
     w = Window.partitionBy(*by).orderBy(*order)
     prev = F.lag(ts_col).over(w)
-    gap = F.col(ts_col).cast("timestamp").cast("bigint") - prev.cast(
-        "timestamp"
-    ).cast("bigint")
-    is_new = F.when(prev.isNull() | (gap > gap_s), 1).otherwise(0)
+    # exact microsecond interval: a cast to whole seconds would put
+    # 1800.5 s on the same side of a 1800 s gap as 1800 s
+    gap = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
+        prev.cast("timestamp")
+    )
+    is_new = F.when(prev.isNull() | (gap > gap_s * 1_000_000), 1).otherwise(0)
     run = Window.partitionBy(*by).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

@@ -63,7 +63,7 @@ import shutil
 import time
 import uuid
 from pathlib import Path
-from typing import Any, Sequence
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -114,6 +114,12 @@ _DV_SCHEMA = StructType(
 )
 
 
+# the routing rule's one knob: a change takes the deletion-vector path
+# when the rows it supersedes are at most this share of the touched
+# files' live rows, and rewrites them otherwise
+_DV_ROW_FRACTION = 0.2
+
+
 def _dv_of(f: dict) -> dict:
     return f.get("dv") or {}
 
@@ -133,12 +139,24 @@ def _entry_id(f: dict) -> tuple:
     return (f["path"], tuple(d.get("paths", ())), d.get("rows", 0))
 
 
+def _use_vectors(mode: str, n_rows: int, touched: "list[dict]") -> bool:
+    """THE routing rule between deletion vectors and a rewrite, shared
+    by every verb that offers both: ``dv``/``mor`` always take vectors,
+    ``rewrite``/``cow`` never do, and ``auto`` takes them when
+    ``n_rows`` — the rows the change supersedes, or a free upper bound
+    on them — are at most ``_DV_ROW_FRACTION`` of the touched files'
+    live rows (the change-few case vectors exist for; past it a rewrite
+    is cheaper than carrying big vectors)."""
+    if mode == "auto":
+        return n_rows <= _DV_ROW_FRACTION * sum(_logical_rows(f) for f in touched)
+    return mode in ("dv", "mor")
+
+
 def _attach_dv(
     files: "list[dict]", counts: "dict[str, int]", dv_files: "list[str]"
 ) -> list[dict]:
     """Manifest entries with the new consolidated vector reference
-    attached to every entry that gained positions — shared by all
-    three DV write paths so the accounting cannot drift."""
+    attached to every entry that gained positions."""
     out = []
     for f in files:
         if f["path"] in counts:
@@ -352,11 +370,6 @@ def _extended_mapping(
     return out
 
 
-def _fmt_fields(mapping: "dict[str, str]") -> dict:
-    """The format-carrying manifest fields every verb must copy."""
-    return {"column_mapping": mapping} if mapping else {}
-
-
 def _bloom_canon(v: Any, tag: str) -> bytes:
     """Type-tagged canonical bytes of a bloom-indexed value. The tag is
     derived from the DECLARED column type on both sides (write: arrow
@@ -566,7 +579,17 @@ def _file_stats(path: str) -> tuple[dict[str, list], int]:
 
 class TxnTable:
     """A transactional parquet table at ``path`` with snapshot reads,
-    atomic commits, time travel, and copy-on-write file-pruned MERGE.
+    atomic commits, time travel, and file-pruned MERGE / DELETE /
+    UPDATE.
+
+    Every verb that replaces rows (``merge``, ``delete``, ``update``,
+    ``apply_changes``, ``purge_vectors``) is a thin caller of ONE
+    row-change kernel, :meth:`_change_rows`: the touched files are
+    either rewritten (copy-on-write) or keep their bytes while the
+    superseded rows become deletion-vector positions, picked by one
+    routing rule (:func:`_use_vectors`). Every commit's manifest comes
+    from one builder (:func:`_new_manifest`) through one publish point
+    (:meth:`_commit`).
 
     ::
 
@@ -599,11 +622,40 @@ class TxnTable:
         ):
             raise TxnTableNotFound(f"no transactional table at {path}")
 
-    def _commit(self, version: int, manifest: dict) -> None:
-        """Publish ``manifest`` as ``version`` through this table's
-        commit arbitration — the single choke point every verb's
-        commit goes through."""
-        _publish(self.path, version, manifest, backend=self.commit_backend)
+    def _commit(
+        self,
+        base: dict,
+        op: str,
+        files: "list[dict]",
+        schema: "str | None" = None,
+        mapping: "dict[str, str] | None" = None,
+        keys: "list[str] | None" = None,
+        meta: "dict | None" = None,
+        **extra: Any,
+    ) -> int:
+        """Publish ``op`` as the version after manifest ``base`` through
+        this table's commit arbitration — the single choke point every
+        verb's commit goes through. Keys, schema (JSON) and column
+        mapping default to ``base``'s, ``base``'s meta rolls forward
+        under ``meta``, and the manifest comes from
+        :func:`_new_manifest`. Returns the published version."""
+        version = base["version"] + 1
+        _publish(
+            self.path,
+            version,
+            _new_manifest(
+                version,
+                op,
+                keys or _keys(base),
+                base["schema"] if schema is None else schema,
+                files,
+                _mapping_of(base) if mapping is None else mapping,
+                _rolled_meta(base, meta),
+                **extra,
+            ),
+            backend=self.commit_backend,
+        )
+        return version
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -662,26 +714,21 @@ class TxnTable:
                 **(meta or {}),
                 _BLOOM_KEY: {"cols": list(bloom_cols), "fpp": float(bloom_fpp)},
             }
-        if sort_by_key:
-            out = (
-                df.repartitionByRange(n_files, *keys)
-                if n_files
-                else df.repartitionByRange(*keys)
-            )
-        else:
-            out = df
+        out = _range_sorted(df, keys, n_files) if sort_by_key else df
         files = _write_data_files(spark, p, out, constraints)
-        manifest = {
-            "version": 0,
-            "op": "create",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": df.schema.json(),
-            "files": _stat_entries(p, files, keys[0]),
-        }
-        if meta:
-            manifest["meta"] = meta
-        _publish(p, 0, manifest, backend=commit_backend)
+        _publish(
+            p,
+            0,
+            _new_manifest(
+                0,
+                "create",
+                keys,
+                df.schema.json(),
+                _stat_entries(p, files, keys[0]),
+                meta=meta,
+            ),
+            backend=commit_backend,
+        )
         return cls(spark, path, commit_backend=commit_backend)
 
     # -- snapshot reads ----------------------------------------------------
@@ -730,7 +777,7 @@ class TxnTable:
         receipts, audits) that would otherwise re-run the manifest
         prune just to count it."""
         m = self._manifest(version)
-        schema = StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema_of(m)
         entries, all_ranges = _pruned_entries(m, schema, key_range, ranges, eq)
         mp = _mapping_of(m)
         df = self._read_entries(schema, entries, mapping=mp)
@@ -848,24 +895,6 @@ class TxnTable:
         df = _logical(df)
         return df if with_lineage else df.drop("_dv_file", "_dv_pos")
 
-    def _consolidated_positions(
-        self, positions: DataFrame, dvd: "list[dict]"
-    ) -> DataFrame:
-        """Union new ``(file, pos)`` pairs with the PRIOR vectors of
-        the entries gaining a new one — each entry references exactly
-        one consolidated vector set, so readers never chain
-        sidecars."""
-        prior_paths = sorted(
-            {p for f in dvd for p in _dv_of(f).get("paths", [])}
-        )
-        if prior_paths:
-            positions = positions.unionByName(
-                self.spark.read.schema(_DV_SCHEMA)
-                .parquet(*[str(self.path / p) for p in prior_paths])
-                .where(F.col("_file").isin([f["path"] for f in dvd]))
-            )
-        return positions
-
     def history(self) -> list[dict]:
         """Commit log, newest first (version, op, file/row counts)."""
         out = []
@@ -914,10 +943,8 @@ class TxnTable:
         stats already stored."""
         if not 0 < fpp < 0.5:
             raise ValueError(f"fpp must be in (0, 0.5), got {fpp}")
-        base = self.version()
-        m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        fields = {f.name: f.dataType for f in schema.fields}
+        m = self._manifest()
+        fields = {f.name: f.dataType for f in _schema_of(m).fields}
         for c in cols:
             if c not in fields:
                 raise ValueError(f"bloom column {c!r} not in table schema")
@@ -927,18 +954,8 @@ class TxnTable:
                     f"{fields[c].simpleString()} (equality canon unstable)"
                 )
         cfg = {"cols": list(cols), "fpp": float(fpp)} if cols else None
-        manifest = {
-            "version": base + 1,
-            "op": "bloom",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": m["schema"],
-            "files": m["files"],
-            "meta": _rolled_meta(m, {_BLOOM_KEY: cfg}),
-            **_fmt_fields(_mapping_of(m)),
-        }
-        self._commit(base + 1, manifest)
-        return {"version": base + 1, "bloom_cols": list(cols)}
+        version = self._commit(m, "bloom", m["files"], meta={_BLOOM_KEY: cfg})
+        return {"version": version, "bloom_cols": list(cols)}
 
     def _schema_change_guards(self, m: dict, name: str) -> None:
         """Shared rename/drop refusals: constraints are SQL text over
@@ -964,9 +981,8 @@ class TxnTable:
         first; bloom-index configs follow the rename. Readers older
         than format v2 refuse the table afterwards (they would surface
         NULL for every mapped column)."""
-        base = self.version()
-        m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
+        m = self._manifest()
+        schema = _schema_of(m)
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"column {old!r} not in table schema")
@@ -993,20 +1009,16 @@ class TxnTable:
                 **cfg,
                 "cols": [new if c == old else c for c in cfg["cols"]],
             }
-        manifest = {
-            "version": base + 1,
-            "op": "rename_column",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": new_schema.json(),
-            "files": m["files"],
-            "column_mapping": full,
-        }
-        rolled = _rolled_meta(m, meta_delta or None)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {"version": base + 1, "renamed": {old: new}}
+        version = self._commit(
+            m,
+            "rename_column",
+            m["files"],
+            schema=new_schema.json(),
+            mapping=full,
+            keys=keys,
+            meta=meta_delta,
+        )
+        return {"version": version, "renamed": {old: new}}
 
     def drop_column(self, name: str) -> dict:
         """Metadata-only column drop (format_version 2): the column
@@ -1017,9 +1029,8 @@ class TxnTable:
         birth names, so the old bytes can never resurrect. Key columns
         cannot be dropped; constraints referencing the column must go
         first; a bloom config on it is removed."""
-        base = self.version()
-        m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
+        m = self._manifest()
+        schema = _schema_of(m)
         if name not in [f.name for f in schema.fields]:
             raise ValueError(f"column {name!r} not in table schema")
         if name in _keys(m):
@@ -1039,20 +1050,15 @@ class TxnTable:
         if cfg and name in (cfg.get("cols") or []):
             cols = [c for c in cfg["cols"] if c != name]
             meta_delta[_BLOOM_KEY] = {**cfg, "cols": cols} if cols else None
-        manifest = {
-            "version": base + 1,
-            "op": "drop_column",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": new_schema.json(),
-            "files": m["files"],
-            "column_mapping": full,
-        }
-        rolled = _rolled_meta(m, meta_delta or None)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {"version": base + 1, "dropped": name}
+        version = self._commit(
+            m,
+            "drop_column",
+            m["files"],
+            schema=new_schema.json(),
+            mapping=full,
+            meta=meta_delta,
+        )
+        return {"version": version, "dropped": name}
 
     def add_constraint(self, name: str, sql: str) -> dict:
         """Add a CHECK constraint. Validates EXISTING rows first (one
@@ -1065,41 +1071,26 @@ class TxnTable:
         constraint change this one would erase) collides at publish
         with :class:`ConcurrentCommitError` instead of being silently
         absorbed."""
-        base = self.version()
-        m = self._manifest(base)
-        current = dict((m.get("meta") or {}).get(_CONSTRAINTS_KEY) or {})
+        m = self._manifest()
+        current = _constraints_of(m)
         if name in current:
             raise ValueError(f"constraint {name!r} already exists")
-        _check_constraints(self.read(version=base), {name: sql})
-        return self._constraints_commit(base, m, {**current, name: sql})
+        _check_constraints(self.read(version=m["version"]), {name: sql})
+        return self._constraints_commit(m, {**current, name: sql})
 
     def drop_constraint(self, name: str) -> dict:
-        base = self.version()
-        m = self._manifest(base)
-        current = dict((m.get("meta") or {}).get(_CONSTRAINTS_KEY) or {})
-        if name not in current:
+        m = self._manifest()
+        if name not in _constraints_of(m):
             raise ValueError(f"no constraint named {name!r}")
-        current.pop(name)
-        return self._constraints_commit(base, m, current)
+        return self._constraints_commit(
+            m, {k: v for k, v in _constraints_of(m).items() if k != name}
+        )
 
-    def _constraints_commit(
-        self, base: int, m: dict, new_map: "dict[str, str]"
-    ) -> dict:
-        manifest = {
-            "version": base + 1,
-            "op": "constraints",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": m["schema"],
-            "files": m["files"],
-            "meta": _rolled_meta(m, {_CONSTRAINTS_KEY: new_map}),
-            **_fmt_fields(_mapping_of(m)),
-        }
-        self._commit(base + 1, manifest)
-        return {"version": base + 1, "constraints": dict(new_map)}
-
-    def _enforce(self, df: DataFrame, m: dict) -> None:
-        _check_constraints(df, _constraints_of(m))
+    def _constraints_commit(self, m: dict, new_map: "dict[str, str]") -> dict:
+        version = self._commit(
+            m, "constraints", m["files"], meta={_CONSTRAINTS_KEY: new_map}
+        )
+        return {"version": version, "constraints": new_map}
 
     def version_at(self, when: "float | datetime.datetime") -> int:
         """Timestamp time travel: the newest version committed at or
@@ -1149,30 +1140,27 @@ class TxnTable:
         meta: dict | None = None,
         merge_schema: bool = False,
         strategy: str = "cow",
-        dv_row_fraction: float = 0.2,
     ) -> dict:
         """MERGE: keys in both → source row wins; keys only in source
         → inserted. Raises :class:`ConcurrentCommitError` if another
-        writer commits first (re-read and re-merge to retry). Two
-        physical strategies:
+        writer commits first (re-read and re-merge to retry). Only the
+        files whose merge-key [min, max] overlaps the delta's range are
+        touched; the row-change kernel (:meth:`_change_rows`) replaces
+        their superseded rows by the path ``strategy`` picks:
 
-        - ``strategy="cow"`` (default, copy-on-write): only data files
-          whose merge-key [min, max] overlaps the delta's range are
-          rewritten; all other files carry into the new snapshot
-          untouched. Returns ``{"version", "rewritten", "kept"}`` so
-          callers can see the write amplification.
+        - ``strategy="cow"`` (default, copy-on-write): the touched files
+          are rewritten with the source merged in; every other file
+          carries into the new snapshot untouched. Returns
+          ``{"version", "rewritten", "kept"}`` so callers can see the
+          write amplification.
         - ``strategy="mor"`` (merge-on-read, the Delta DV-merge
-          construction): NO touched file rewrites — the superseded old
-          rows become deletion-vector positions (one key semi-join
-          over the range-pruned touched region) and the source rows
-          write as new files. O(delta + matched rows) instead of
-          O(touched files): the right trade for sparse CDC deltas into
-          wide files, paid back as the read-side anti-join until
-          :meth:`compact`/:meth:`maybe_compact` clears it.
-        - ``strategy="auto"``: ``mor`` when the delta's row count is at
-          most ``dv_row_fraction`` of the touched files' rows (a free
-          upper bound on matches — both counts are already known),
-          ``cow`` otherwise.
+          construction): the superseded rows become deletion-vector
+          positions and only the source rows write — the right trade
+          for sparse CDC deltas into wide files. The receipt adds
+          ``matched_rows`` and ``dv_files``.
+        - ``strategy="auto"``: the shared routing rule
+          (:func:`_use_vectors`), with the delta's row count as the free
+          upper bound on matches.
 
         ``merge_schema=True`` allows ADDITIVE evolution: the source may
         carry new columns (appended to the table schema as nullable;
@@ -1185,162 +1173,48 @@ class TxnTable:
             raise ValueError(
                 f"merge strategy must be cow|mor|auto, not {strategy!r}"
             )
-        base_version = self.version()
-        m = self._manifest(base_version)
+        m = self._manifest()
         keys = _keys(m)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        mp = _mapping_of(m)
-        if merge_schema:
-            before = {f.name for f in schema.fields}
-            schema = _evolved_schema(source, schema, self.path)
-            mp = _extended_mapping(
-                mp, schema, [f.name for f in schema.fields if f.name not in before]
-            )
-        else:
-            _check_schema(source, schema, self.path)
-        bounds = source.agg(
-            *_key_bound_aggs(keys), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        if bounds["n"] == 0:  # empty delta → nothing to do, no new version
-            return {"version": base_version, "rewritten": 0, "kept": len(m["files"])}
-        touched, kept = [], []
-        if bounds["lo0"] is None:
-            # every delta row's LEADING key is NULL: NULL never equals a
-            # stored key, so no file can match — all rows INSERT (the
-            # same outcome a null-key row gets when a non-null sibling
-            # key forces the rewrite path; consistent, no silent drop)
-            kept = list(m["files"])
-        else:
-            touched, kept = _split_by_delta_bounds(
-                m["files"], keys, bounds, schema, mp
-            )
+        schema, mp = self._write_schema(m, source, merge_schema)
+        n, touched = _touched_by_keys(source, m["files"], keys, schema, mp)
+        if n == 0:  # empty delta → nothing to do, no new version
+            return {"version": m["version"], "rewritten": 0, "kept": len(m["files"])}
         src = source.select(*[f.name for f in schema.fields])
-        self._enforce(src, m)
-        if touched and strategy != "cow":
-            if strategy == "mor" or bounds["n"] <= dv_row_fraction * sum(
-                _logical_rows(f) for f in touched
-            ):
-                return self._merge_via_dv(
-                    m, schema, keys, src, touched, on_duplicate_keys, meta, mp
-                )
-        if touched:
-            old = self._read_entries(schema, touched, mapping=mp)
-            merged = merge_dataframes(
+        out = self._change_rows(
+            m,
+            "merge",
+            touched,
+            bool(touched) and _use_vectors(strategy, n, touched),
+            rewrite=lambda old: merge_dataframes(
                 old, src, keys, on_duplicate_keys=on_duplicate_keys
-            )
-        else:
-            merged = src
-        new_files = _write_data_files(
-            self.spark, self.path, merged, _constraints_of(m), mapping=mp
-        )
-        manifest = {
-            "version": base_version + 1,
-            "op": "merge",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": schema.json(),
-            "files": kept + _stat_entries(self.path, new_files, keys[0], mp),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base_version + 1, manifest)
-        out = {
-            "version": base_version + 1,
-            "rewritten": len(touched),
-            "kept": len(kept),
-        }
-        if strategy == "mor":
-            # an explicit-mor pure-insert delta (no range-overlapping
-            # files) lands here: keep the mor receipt shape so callers
-            # can rely on the keys regardless of data distribution
-            out["matched_rows"] = 0
-            out["dv_files"] = 0
-        return out
-
-    def _merge_via_dv(
-        self,
-        m: dict,
-        schema: StructType,
-        keys: "list[str]",
-        src: DataFrame,
-        touched: "list[dict]",
-        on_duplicate_keys: str,
-        meta: dict | None,
-        mp: "dict[str, str] | None" = None,
-    ) -> dict:
-        """MERGE as merge-on-read: old rows whose key appears in the
-        source become deletion-vector positions (a key semi-join over
-        the range-pruned touched files — the scan copy-on-write never
-        pays, bought back many times over by not copying any file) and
-        the source rows write as new files. The matched set persists
-        across its two consumers (per-file counts, positions sidecar)
-        so both see one materialization. The duplicate-key guard is
-        the SAME plan merge_dataframes installs — built by merging
-        into an empty target, so the two strategies cannot drift on
-        MERGE's error semantics."""
-        base = m["version"]
-        mp = mp if mp is not None else _mapping_of(m)
-        src_keys = src.select(*keys).distinct()
-        matched = (
-            self._read_entries(schema, touched, with_lineage=True, mapping=mp)
-            .join(src_keys, on=keys, how="left_semi")
-            .select(
-                F.col("_dv_file").alias("_file"),
-                F.col("_dv_pos").alias("_pos"),
-            )
-            .persist()
-        )
-        try:
-            # the guarded data write goes FIRST: the common failure
-            # modes (duplicate source keys, constraint violation) fire
-            # inside it, before any sidecar work is spent or orphaned
-            guarded = merge_dataframes(
+            ),
+            # only positions are needed from the superseded rows
+            match=lambda live: live.join(
+                src.select(*keys).distinct(), on=keys, how="left_semi"
+            ).select("_dv_file", "_dv_pos"),
+            rows=src,
+            # the vector path writes the source alone, under the SAME
+            # duplicate-key guard merge_dataframes installs on a rewrite
+            # (merging into an empty target), so the two paths cannot
+            # drift on MERGE's error semantics
+            guard=lambda r: merge_dataframes(
                 self.spark.createDataFrame([], schema),
-                src,
+                r,
                 keys,
                 on_duplicate_keys=on_duplicate_keys,
-            )
-            new_files = _write_data_files(
-                self.spark, self.path, guarded, _constraints_of(m), mapping=mp
-            )
-            counts = {
-                r["_file"]: r["n"]
-                for r in matched.groupBy("_file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            dv_files: list[str] = []
-            if counts:
-                dvd = [f for f in touched if f["path"] in counts]
-                positions = self._consolidated_positions(matched, dvd)
-                dv_files = _write_data_files(
-                    self.spark, self.path, positions.coalesce(1)
-                )
-        finally:
-            matched.unpersist()
-        manifest = {
-            "version": base + 1,
-            "op": "merge",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": schema.json(),
-            "files": _attach_dv(m["files"], counts, dv_files)
-            + _stat_entries(self.path, new_files, keys[0], mp),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {
-            "version": base + 1,
-            "rewritten": 0,
-            "kept": len(m["files"]),
-            "matched_rows": sum(counts.values()),
-            "dv_files": len(dv_files),
-        }
+            ),
+            count_key="matched_rows",
+            schema=schema,
+            mapping=mp,
+            meta=meta,
+        )
+        if strategy == "mor":
+            # an explicit-mor pure-insert delta (no range-overlapping
+            # files) lands on the plain write: keep the mor receipt shape
+            # so callers can rely on the keys regardless of distribution
+            out.setdefault("matched_rows", 0)
+            out.setdefault("dv_files", 0)
+        return out
 
     def merge_with_retry(
         self,
@@ -1350,7 +1224,6 @@ class TxnTable:
         meta: dict | None = None,
         merge_schema: bool = False,
         strategy: str = "cow",
-        dv_row_fraction: float = 0.2,
     ) -> dict:
         """Optimistic-concurrency loop around :meth:`merge`: on
         :class:`ConcurrentCommitError` the merge re-reads the NEW
@@ -1367,7 +1240,6 @@ class TxnTable:
                     meta=meta,
                     merge_schema=merge_schema,
                     strategy=strategy,
-                    dv_row_fraction=dv_row_fraction,
                 )
             except ConcurrentCommitError as exc:
                 last = exc
@@ -1378,38 +1250,19 @@ class TxnTable:
         the bulk-ingest fast path (dedup against existing keys is the
         caller's job or :meth:`merge`'s). O(delta) always.
         ``merge_schema`` as in :meth:`merge` (additive only)."""
-        base = self.version()
-        m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        mp = _mapping_of(m)
-        if merge_schema:
-            before = {f.name for f in schema.fields}
-            schema = _evolved_schema(df, schema, self.path)
-            mp = _extended_mapping(
-                mp, schema, [f.name for f in schema.fields if f.name not in before]
-            )
-        else:
-            _check_schema(df, schema, self.path)
-        out = df.select(*[f.name for f in schema.fields])
-        self._enforce(out, m)
-        new_files = _write_data_files(
-            self.spark, self.path, out, _constraints_of(m), mapping=mp
+        m = self._manifest()
+        schema, mp = self._write_schema(m, df, merge_schema)
+        new_files = self._write_checked(
+            df.select(*[f.name for f in schema.fields]), m, mp
         )
-        manifest = {
-            "version": base + 1,
-            "op": "append",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": schema.json(),
-            "files": m["files"]
-            + _stat_entries(self.path, new_files, _keys(m)[0], mp),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, None)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {"version": base + 1, "added": len(new_files)}
+        version = self._commit(
+            m,
+            "append",
+            m["files"] + _stat_entries(self.path, new_files, _keys(m)[0], mp),
+            schema=schema.json(),
+            mapping=mp,
+        )
+        return {"version": version, "added": len(new_files)}
 
     def overwrite(
         self,
@@ -1424,190 +1277,73 @@ class TxnTable:
         :meth:`vacuum`). O(new data) write — the full-refresh escape
         hatch (backfills, :func:`sync_table`'s resync fallback), not
         the incremental path."""
-        base = self.version()
-        m = self._manifest(base)
+        m = self._manifest()
         keys = _keys(m)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        mp = _mapping_of(m)
-        if merge_schema:
-            before = {f.name for f in schema.fields}
-            schema = _evolved_schema(df, schema, self.path)
-            mp = _extended_mapping(
-                mp, schema, [f.name for f in schema.fields if f.name not in before]
-            )
-        else:
-            _check_schema(df, schema, self.path)
+        schema, mp = self._write_schema(m, df, merge_schema)
         out = df.select(*[f.name for f in schema.fields])
-        self._enforce(out, m)
-        if sort_by_key:
-            out = (
-                out.repartitionByRange(n_files, *keys)
-                if n_files
-                else out.repartitionByRange(*keys)
-            )
-        new_files = _write_data_files(
-            self.spark, self.path, out, _constraints_of(m), mapping=mp
+        new_files = self._write_checked(
+            _range_sorted(out, keys, n_files) if sort_by_key else out,
+            m,
+            mp,
+            new=out,
         )
-        manifest = {
-            "version": base + 1,
-            "op": "overwrite",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": schema.json(),
-            "files": _stat_entries(self.path, new_files, keys[0], mp),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {"version": base + 1, "added": len(new_files)}
+        version = self._commit(
+            m,
+            "overwrite",
+            _stat_entries(self.path, new_files, keys[0], mp),
+            schema=schema.json(),
+            mapping=mp,
+            meta=meta,
+        )
+        return {"version": version, "added": len(new_files)}
 
-    # -- DELETE / UPDATE (scan-targeted copy-on-write) ---------------------
+    # -- DELETE / UPDATE (scan-targeted row changes) -----------------------
 
     def delete(
         self,
         predicate: "Column | str",
         meta: dict | None = None,
         mode: str = "auto",
-        dv_row_fraction: float = 0.2,
     ) -> dict:
         """``DELETE WHERE predicate`` with file-level targeting, the
-        Delta/Iceberg construction, in two physical strategies:
+        Delta/Iceberg construction: one pushed-down scan counts the
+        matches per file (:meth:`_matches`), only files with a
+        match are touched, and the row-change kernel
+        (:meth:`_change_rows`) removes the matches by the path ``mode``
+        picks:
 
-        - ``mode="rewrite"``: ONE pushed-down scan finds the files
-          containing at least one matching row; only those rewrite
-          without their matching rows, every other file carries into
-          the new snapshot untouched. O(scan + rewritten files).
+        - ``mode="rewrite"``: the touched files rewrite without their
+          matching rows; every other file carries over untouched.
+          O(scan + rewritten files).
         - ``mode="dv"`` (deletion vectors, Delta's row-level-delete
-          design): NO data files rewrite at all — the matching
-          ``(file, row position)`` pairs are written as a small parquet
-          sidecar and the touched entries gain a ``dv`` reference that
-          every read anti-joins out. O(scan + matched rows): deleting
-          100 rows from a 100 TB table writes ~100 positions, where a
-          rewrite would copy every touched file. The read-side debt is
-          one broadcast anti-join; :meth:`compact` (or
+          design): no data file rewrites — deleting 100 rows from a
+          100 TB table writes ~100 positions. The read-side debt is one
+          broadcast anti-join; :meth:`compact` (or
           :meth:`maybe_compact`, which watches ``dv_fraction``)
-          materializes vectors away and restores vector-free files.
-        - ``mode="auto"`` (default): one lineage scan counts matches
-          per file, then picks vectors when matches are at most
-          ``dv_row_fraction`` of the touched files' rows (the
-          delete-few case vectors exist for) and a classic rewrite
-          when the predicate hits wide (where rewriting is cheaper
-          than carrying big vectors).
+          materializes vectors away.
+        - ``mode="auto"`` (default): the shared routing rule
+          (:func:`_use_vectors`) on the measured match count.
 
         SQL ternary semantics: rows where the predicate is NULL are
         KEPT, exactly as ``DELETE FROM t WHERE p`` keeps them."""
         if mode not in ("auto", "rewrite", "dv"):
             raise ValueError(f"delete mode must be auto|rewrite|dv, not {mode!r}")
-        base = self.version()
-        m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        cond = F.coalesce(pred, F.lit(False))
-        if mode == "rewrite":
-            touched = self._files_matching(m, schema, cond)
-            counts = None
-        else:
-            # one scan yields targeting AND per-file match counts
-            live = self._read_entries(
-                schema, m["files"], with_lineage=True, mapping=_mapping_of(m)
-            )
-            counts = {
-                r["_dv_file"]: r["n"]
-                for r in live.where(cond)
-                .groupBy("_dv_file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            touched = [f for f in m["files"] if f["path"] in counts]
+        m = self._manifest()
+        cond = _match_cond(predicate)
+        counts, touched = self._matches(m, cond)
         if not touched:
-            return {"version": base, "rewritten": 0, "deleted_rows": 0}
-        if counts is not None:
-            total_matched = sum(counts.values())
-            use_dv = mode == "dv" or total_matched <= dv_row_fraction * sum(
-                _logical_rows(f) for f in touched
-            )
-            if use_dv:
-                return self._delete_via_dv(m, schema, cond, touched, counts, meta)
-        kept = [f for f in m["files"] if f not in touched]
-        mp = _mapping_of(m)
-        old = self._read_entries(schema, touched, mapping=mp)
-        remaining = old.where(~cond)
-        new_files = _write_data_files(
-            self.spark, self.path, remaining, mapping=mp
+            return {"version": m["version"], "rewritten": 0, "deleted_rows": 0}
+        return self._change_rows(
+            m,
+            "delete",
+            touched,
+            _use_vectors(mode, sum(counts.values()), touched),
+            rewrite=lambda old: old.where(~cond),
+            match=lambda live: live.where(cond),
+            counts=counts,
+            count_key="deleted_rows",
+            meta=meta,
         )
-        entries = _stat_entries(self.path, new_files, _keys(m)[0], mp)
-        manifest = {
-            "version": base + 1,
-            "op": "delete",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": m["schema"],
-            "files": kept + entries,
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {
-            "version": base + 1,
-            "rewritten": len(touched),
-            "kept": len(kept),
-            "deleted_rows": sum(_logical_rows(f) for f in touched)
-            - sum(e["rows"] for e in entries),
-        }
-
-    def _delete_via_dv(
-        self,
-        m: dict,
-        schema: StructType,
-        cond: Column,
-        touched: "list[dict]",
-        counts: "dict[str, int]",
-        meta: dict | None,
-    ) -> dict:
-        """Publish a delete as deletion-vector sidecars: re-run the
-        (already-pruned) match scan to materialize positions, union in
-        the touched files' PRIOR vectors (each entry references exactly
-        one consolidated vector set — readers never chain sidecars),
-        and commit entries whose data files are byte-identical."""
-        base = m["version"]
-        mp = _mapping_of(m)
-        matched = (
-            self._read_entries(schema, touched, with_lineage=True, mapping=mp)
-            .where(cond)
-            .select(
-                F.col("_dv_file").alias("_file"),
-                F.col("_dv_pos").alias("_pos"),
-            )
-        )
-        matched = self._consolidated_positions(matched, touched)
-        # one sidecar file per delete: positions are tiny relative to
-        # data, and every read opens the anti-join side — inheriting
-        # the scan's partitioning would fragment it into per-task files
-        dv_files = _write_data_files(self.spark, self.path, matched.coalesce(1))
-        manifest = {
-            "version": base + 1,
-            "op": "delete",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": m["schema"],
-            "files": _attach_dv(m["files"], counts, dv_files),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {
-            "version": base + 1,
-            "rewritten": 0,
-            "kept": len(m["files"]),
-            "deleted_rows": sum(counts.values()),
-            "dv_files": len(dv_files),
-        }
 
     def update(
         self,
@@ -1615,28 +1351,22 @@ class TxnTable:
         where: "Column | str",
         meta: dict | None = None,
         mode: str = "auto",
-        dv_row_fraction: float = 0.2,
     ) -> dict:
         """``UPDATE SET col = expr, ... WHERE predicate`` with the same
-        scan-targeted file strategies as :meth:`delete`. Assignment
-        expressions are cast to the column's existing type (the table
-        schema never drifts through an update). Merge-key columns can
-        not be updated — a key change moves a row between files, which
-        is MERGE's job (delete + merge expresses it exactly).
-
-        ``mode="rewrite"`` copies every file containing a match without
-        its old rows' values (O(touched files)); ``mode="dv"`` is the
-        merge-on-read construction — the matched ORIGINAL rows become
-        deletion-vector positions and only the POST-assignment rows
-        write as a new file, O(scan + matched rows), zero touched-file
-        copies; ``mode="auto"`` (default) routes by the measured match
-        fraction exactly as :meth:`delete` does."""
+        targeting scan and the same ``mode`` paths as :meth:`delete`:
+        ``rewrite`` copies every touched file with the new values,
+        ``dv`` turns the matched ORIGINAL rows into deletion-vector
+        positions and writes only their post-assignment rows, ``auto``
+        routes by the measured match count. Assignment expressions are
+        cast to the column's existing type (the table schema never
+        drifts through an update). Merge-key columns can not be updated
+        — a key change moves a row between files, which is MERGE's job
+        (delete + merge expresses it exactly)."""
         if mode not in ("auto", "rewrite", "dv"):
             raise ValueError(f"update mode must be auto|rewrite|dv, not {mode!r}")
-        base = self.version()
-        m = self._manifest(base)
+        m = self._manifest()
         keys = _keys(m)
-        schema = StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema_of(m)
         types = {f.name: f.dataType for f in schema.fields}
         for c in assignments:
             if c in keys:
@@ -1647,197 +1377,254 @@ class TxnTable:
                 )
             if c not in types:
                 raise ValueError(f"unknown column {c!r} in UPDATE SET")
-        pred = F.expr(where) if isinstance(where, str) else where
-        cond = F.coalesce(pred, F.lit(False))
-        if mode == "rewrite":
-            touched = self._files_matching(m, schema, cond)
-            counts = None
-        else:
-            live = self._read_entries(
-                schema, m["files"], with_lineage=True, mapping=_mapping_of(m)
-            )
-            counts = {
-                r["_dv_file"]: r["n"]
-                for r in live.where(cond)
-                .groupBy("_dv_file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            touched = [f for f in m["files"] if f["path"] in counts]
-        if not touched:
-            return {"version": base, "rewritten": 0, "updated_rows": 0}
-        if counts is not None:
-            total_matched = sum(counts.values())
-            use_dv = mode == "dv" or total_matched <= dv_row_fraction * sum(
-                _logical_rows(f) for f in touched
-            )
-            if use_dv:
-                return self._update_via_dv(
-                    m, schema, types, assignments, cond, touched, meta
-                )
-        kept = [f for f in m["files"] if f not in touched]
-        mp = _mapping_of(m)
-        old = self._read_entries(schema, touched, mapping=mp)
-        # bounded by the touched region; the auto routing scan already
-        # counted the matches exactly — no second job for that case
-        n_updated = (
-            sum(counts.values())
-            if counts is not None
-            else old.where(cond).count()
-        )
-        # SQL UPDATE semantics: the WHERE predicate and EVERY assignment
-        # expression see the ORIGINAL row (SET a=b, b=a swaps). One
-        # select with a pre-evaluated match flag gives exactly that —
-        # chained withColumn would let later expressions (and the
-        # re-used predicate) observe earlier assignments' new values
-        flagged = old.withColumn("_upd_match", cond)
-        out_cols = []
-        for f in schema.fields:
-            if f.name in assignments:
-                expr = assignments[f.name]
-                col = F.expr(expr) if isinstance(expr, str) else expr
-                out_cols.append(
-                    F.when(F.col("_upd_match"), col.cast(types[f.name]))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                )
-            else:
-                out_cols.append(F.col(f.name))
-        upd = flagged.select(*out_cols, F.col("_upd_match"))
-        # POST-assignment values of the ORIGINALLY-matched rows must
-        # satisfy the constraints (no-op job unless the table has any)
-        self._enforce(upd.where(F.col("_upd_match")).drop("_upd_match"), m)
-        upd = upd.drop("_upd_match")
-        new_files = _write_data_files(
-            self.spark, self.path, upd, _constraints_of(m), mapping=mp
-        )
-        manifest = {
-            "version": base + 1,
-            "op": "update",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": m["schema"],
-            "files": kept + _stat_entries(self.path, new_files, keys[0], mp),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {
-            "version": base + 1,
-            "rewritten": len(touched),
-            "kept": len(kept),
-            "updated_rows": n_updated,
+        values = {
+            c: (F.expr(e) if isinstance(e, str) else e).cast(types[c])
+            for c, e in assignments.items()
         }
 
-    def _update_via_dv(
+        def assigned(d: DataFrame, flag: "Column | None" = None) -> DataFrame:
+            # SQL UPDATE semantics: the WHERE predicate and EVERY
+            # assignment see the ORIGINAL row (SET a=b, b=a swaps). One
+            # select gives exactly that — chained withColumn would let
+            # later expressions (and a re-used predicate) observe earlier
+            # assignments' new values. ``flag`` marks the matched rows
+            # when ``d`` also holds unmatched ones; the rewrite path
+            # pre-evaluates it as a column, so even a non-deterministic
+            # predicate is evaluated once per row
+            return d.select(
+                *[
+                    (
+                        values[f.name]
+                        if flag is None
+                        else F.when(flag, values[f.name]).otherwise(F.col(f.name))
+                    ).alias(f.name)
+                    if f.name in values
+                    else F.col(f.name)
+                    for f in schema.fields
+                ]
+            )
+
+        cond = _match_cond(where)
+        counts, touched = self._matches(m, cond)
+        if not touched:
+            return {"version": m["version"], "rewritten": 0, "updated_rows": 0}
+        return self._change_rows(
+            m,
+            "update",
+            touched,
+            _use_vectors(mode, sum(counts.values()), touched),
+            rewrite=lambda old: assigned(
+                old.withColumn("_upd_match", cond), F.col("_upd_match")
+            ),
+            match=lambda live: live.where(cond),
+            rows=assigned,
+            counts=counts,
+            count_key="updated_rows",
+            meta=meta,
+        )
+
+    # -- the row-change kernel ---------------------------------------------
+
+    def _matches(
+        self, m: dict, cond: Column
+    ) -> "tuple[dict[str, int], list[dict]]":
+        """``(counts, touched)``: the per-file count of the live rows
+        where ``cond`` holds, and the entries of the files it names —
+        the one targeting scan of delete and update in every mode. A
+        single pushed-down lineage scan; only ``(file, count)`` pairs
+        cross to the driver (bounded by file count). The total feeds the
+        routing rule."""
+        live = self._read_entries(
+            _schema_of(m), m["files"], with_lineage=True, mapping=_mapping_of(m)
+        )
+        counts = {
+            r["_dv_file"]: r["n"]
+            for r in live.where(cond)
+            .groupBy("_dv_file")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        return counts, [f for f in m["files"] if f["path"] in counts]
+
+    def _change_rows(
         self,
         m: dict,
-        schema: StructType,
-        types: dict,
-        assignments: "dict[str, Column | str]",
-        cond: Column,
+        op: str,
         touched: "list[dict]",
-        meta: dict | None,
+        vectors: bool,
+        rewrite: "Callable[[DataFrame], DataFrame]",
+        match: "Callable[[DataFrame], DataFrame] | None" = None,
+        rows: "DataFrame | Callable[[DataFrame], DataFrame] | None" = None,
+        guard: "Callable[[DataFrame], DataFrame] | None" = None,
+        counts: "dict[str, int] | None" = None,
+        count_key: "str | None" = None,
+        schema: "StructType | None" = None,
+        mapping: "dict[str, str] | None" = None,
+        meta: "dict | None" = None,
     ) -> dict:
-        """UPDATE as merge-on-read: the matched ORIGINAL rows become
-        deletion-vector positions (their files stay byte-identical) and
-        only the POST-assignment rows write as new files — O(scan +
-        matched rows) instead of copying every touched file. The
-        matched set is persisted so the positions sidecar and the new
-        rows come from ONE materialization (a non-deterministic
-        predicate re-evaluating differently between the two jobs would
-        otherwise drop or duplicate rows)."""
-        base = m["version"]
-        keys = _keys(m)
-        mp = _mapping_of(m)
-        matched = (
-            self._read_entries(schema, touched, with_lineage=True, mapping=mp)
-            .where(cond)
-            .persist()
-        )
-        try:
-            # every selected row matches, so assignments apply in ONE
-            # select — simultaneous SQL semantics (SET a=b, b=a swaps)
-            out_cols = []
-            for f in schema.fields:
-                if f.name in assignments:
-                    expr = assignments[f.name]
-                    col = F.expr(expr) if isinstance(expr, str) else expr
-                    out_cols.append(col.cast(types[f.name]).alias(f.name))
-                else:
-                    out_cols.append(F.col(f.name))
-            updated = matched.select(*out_cols)
-            self._enforce(updated, m)
-            new_files = _write_data_files(
-                self.spark, self.path, updated, _constraints_of(m), mapping=mp
-            )
-            # manifest accounting comes from the SAME persisted set the
-            # sidecar is written from — the routing scan's counts are
-            # only a heuristic and may differ under a non-deterministic
-            # predicate, which would desynchronize dv.rows from the
-            # sidecar and skew every downstream dv_fraction consumer
-            counts = {
-                r["_file"]: r["n"]
-                for r in matched.groupBy(
-                    F.col("_dv_file").alias("_file")
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            positions = matched.select(
-                F.col("_dv_file").alias("_file"),
-                F.col("_dv_pos").alias("_pos"),
-            )
-            dvd = [f for f in touched if f["path"] in counts]
-            positions = self._consolidated_positions(positions, dvd)
-            dv_files = _write_data_files(
-                self.spark, self.path, positions.coalesce(1)
-            )
-        finally:
-            matched.unpersist()
-        manifest = {
-            "version": base + 1,
-            "op": "update",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": m["schema"],
-            "files": _attach_dv(m["files"], counts, dv_files)
-            + _stat_entries(self.path, new_files, keys[0], mp),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {
-            "version": base + 1,
-            "rewritten": 0,
-            "kept": len(m["files"]),
-            "updated_rows": sum(counts.values()),
-            "dv_files": len(dv_files),
-        }
+        """THE row-change kernel: merge, delete, update, apply_changes
+        and purge_vectors are thin callers of this one body, so the two
+        physical paths, constraint enforcement, the manifest and the
+        receipt cannot drift between verbs. A change supersedes the rows
+        of ``touched`` that ``match`` selects and adds ``rows``; the
+        path decides how the superseded rows leave the snapshot:
 
-    def _files_matching(
-        self, m: dict, schema: StructType, cond: Column
-    ) -> list[dict]:
-        """Manifest entries for data files containing ≥1 row where
-        ``cond`` is true — one distributed scan, nothing but distinct
-        file names crosses to the driver (bounded by file count)."""
-        if not m["files"]:
-            return []
-        hits = (
-            self._read_entries(
-                schema, m["files"], with_lineage=True, mapping=_mapping_of(m)
+        - ``vectors=False`` (copy-on-write): the touched files rewrite
+          as ``rewrite(old)`` — the verb's one-pass plan for "old rows
+          minus superseded plus added" — and their entries are replaced;
+          every other entry carries over verbatim. With nothing touched
+          the write is ``rows`` alone.
+        - ``vectors=True`` (deletion vectors): the touched files stay
+          byte-identical. The superseded rows' ``(file, row position)``
+          pairs go to one sidecar that every read anti-joins out
+          (:meth:`_read_entries`), and only ``rows`` write as data —
+          through ``guard``, the in-plan assertions a verb's rewrite
+          plan carries itself (MERGE's duplicate-key check). O(matched
+          rows) instead of O(touched files).
+
+        ``rows`` (a frame, or a function of the superseded rows —
+        UPDATE's SET) are validated against the CHECK constraints in
+        one pass before the write, and the write carries the in-plan
+        guard; a change that adds no rows (delete, purge) does neither.
+        The data write runs before any sidecar work, so the common
+        failures (duplicate merge keys, violations) fire first.
+        ``counts`` are per-file match counts the caller already has;
+        without them, or when ``rows`` derive from the superseded set,
+        that set is persisted and counted once, so the sidecar, the new
+        rows and the manifest's ``dv.rows`` all come from ONE
+        evaluation (a non-deterministic predicate re-evaluated between
+        jobs would otherwise drop or duplicate rows). ``schema`` and
+        ``mapping`` override the base manifest's (additive evolution).
+        The receipt is ``{"version", "rewritten", "kept"}``, plus the
+        superseded-row count under ``count_key`` when counts are known
+        and ``dv_files`` on the vector path."""
+        schema_json = m["schema"] if schema is None else schema.json()
+        schema = _schema_of(m) if schema is None else schema
+        mp = _mapping_of(m) if mapping is None else mapping
+        dv_files: list[str] = []
+        if not vectors:
+            touched_paths = {f["path"] for f in touched}
+            kept = [f for f in m["files"] if f["path"] not in touched_paths]
+            written = rows
+            if touched:
+                old = self._read_entries(schema, touched, mapping=mp)
+                written = rewrite(old)
+                if callable(rows):
+                    rows = rows(match(old))
+            if rows is None:
+                new_files = _write_data_files(
+                    self.spark, self.path, written, mapping=mp
+                )
+            else:
+                new_files = self._write_checked(written, m, mp, new=rows)
+            files = kept
+        else:
+            kept = m["files"]
+            matched = match(
+                self._read_entries(schema, touched, with_lineage=True, mapping=mp)
             )
-            .where(cond)
-            .select("_dv_file")
-            .distinct()
-            .collect()
+            own = counts is None or callable(rows)
+            if own:
+                matched = matched.persist()
+            try:
+                if callable(rows):
+                    rows = rows(matched)
+                new_files = (
+                    []
+                    if rows is None
+                    else self._write_checked(
+                        rows if guard is None else guard(rows), m, mp, new=rows
+                    )
+                )
+                positions = matched.select(
+                    F.col("_dv_file").alias("_file"),
+                    F.col("_dv_pos").alias("_pos"),
+                )
+                if own:
+                    counts = {
+                        r["_file"]: r["n"]
+                        for r in positions.groupBy("_file")
+                        .agg(F.count(F.lit(1)).alias("n"))
+                        .collect()
+                    }
+                if counts:
+                    # each entry references exactly ONE consolidated
+                    # vector set (readers never chain sidecars): union in
+                    # the PRIOR vectors of the entries gaining positions
+                    dvd = [f for f in touched if f["path"] in counts]
+                    prior = sorted({p for f in dvd for p in _dv_of(f).get("paths", [])})
+                    if prior:
+                        positions = positions.unionByName(
+                            self.spark.read.schema(_DV_SCHEMA)
+                            .parquet(*[str(self.path / p) for p in prior])
+                            .where(F.col("_file").isin([f["path"] for f in dvd]))
+                        )
+                    # one sidecar file per commit: positions are tiny next
+                    # to data, and every read opens the anti-join side —
+                    # inheriting the scan's partitioning would fragment it
+                    dv_files = _write_data_files(
+                        self.spark, self.path, positions.coalesce(1)
+                    )
+            finally:
+                if own:
+                    matched.unpersist()
+            files = _attach_dv(m["files"], counts or {}, dv_files)
+        version = self._commit(
+            m,
+            op,
+            files + _stat_entries(self.path, new_files, _keys(m)[0], mp),
+            schema=schema_json,
+            mapping=mp,
+            meta=meta,
         )
-        matched = {r["_dv_file"] for r in hits}
-        return [f for f in m["files"] if f["path"] in matched]
+        out = {
+            "version": version,
+            "rewritten": 0 if vectors else len(touched),
+            "kept": len(kept),
+        }
+        if count_key and counts is not None:
+            out[count_key] = sum(counts.values())
+        if vectors:
+            out["dv_files"] = len(dv_files)
+        return out
+
+    def _write_schema(
+        self, m: dict, df: DataFrame, merge_schema: bool, check: bool = True
+    ) -> "tuple[StructType, dict[str, str]]":
+        """THE schema gate of the writing verbs: the table schema and
+        column mapping a write of ``df`` lands under. ``merge_schema``
+        allows ADDITIVE evolution — columns only in ``df`` append as
+        nullable, each with a fresh physical name under an active
+        mapping; otherwise ``df`` must match the table's (name, type)
+        list exactly (``check=False`` skips that for a caller that
+        projects the table's columns itself)."""
+        schema, mp = _schema_of(m), _mapping_of(m)
+        if merge_schema:
+            before = {f.name for f in schema.fields}
+            schema = _evolved_schema(df, schema, self.path)
+            mp = _extended_mapping(
+                mp, schema, [f.name for f in schema.fields if f.name not in before]
+            )
+        elif check:
+            _check_schema(df, schema, self.path)
+        return schema, mp
+
+    def _write_checked(
+        self,
+        df: DataFrame,
+        m: dict,
+        mp: "dict[str, str]",
+        new: "DataFrame | None" = None,
+    ) -> list[str]:
+        """Write rows a change adds: validated against the table's CHECK
+        constraints in one aggregation pass first (over ``new`` when the
+        written frame also carries other rows or is re-partitioned), then
+        written under the in-plan guard of :func:`_write_data_files`."""
+        constraints = _constraints_of(m)
+        _check_constraints(df if new is None else new, constraints)
+        return _write_data_files(
+            self.spark, self.path, df, constraints, mapping=mp
+        )
 
     def layout_stats(self) -> dict:
         """Manifest-only layout health (no data or footer reads): file
@@ -1933,37 +1720,15 @@ class TxnTable:
         commit (the row set is unchanged, so change feeds and the cdf
         stream rightly skip it). Returns None when no entry carries a
         vector."""
-        base = self.version()
-        m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
+        m = self._manifest()
         dvd = [f for f in m["files"] if _dv_of(f)]
         if not dvd:
             return None
-        clean = [f for f in m["files"] if not _dv_of(f)]
-        mp = _mapping_of(m)
-        new_files = _write_data_files(
-            self.spark,
-            self.path,
-            self._read_entries(schema, dvd, mapping=mp),
-            mapping=mp,
-        )
-        manifest = {
-            "version": base + 1,
-            "op": "compact",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": m["schema"],
-            "files": clean + _stat_entries(self.path, new_files, _keys(m)[0], mp),
-            **_fmt_fields(mp),
-        }
-        rolled = _rolled_meta(m, None)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
+        out = self._change_rows(m, "compact", dvd, False, rewrite=lambda old: old)
         return {
-            "version": base + 1,
-            "purged_files": len(dvd),
-            "kept": len(clean),
+            "version": out["version"],
+            "purged_files": out["rewritten"],
+            "kept": out["kept"],
         }
 
     def compact(
@@ -1984,39 +1749,25 @@ class TxnTable:
         listed column at once, at the cost of wider per-file MERGE-key
         ranges; the right trade when reads filter on non-key columns
         more often than merges land."""
-        base = self.version()
-        m = self._manifest(base)
+        m = self._manifest()
         keys = _keys(m)
-        df = self.read(base)
+        df = self.read(m["version"])
         if cluster_by:
             from gcpde_spark.tables import TableStore
 
             out = TableStore._zordered(df, list(cluster_by), n_files, bits)
         else:
-            out = (
-                df.repartitionByRange(n_files, *keys)
-                if n_files
-                else df.repartitionByRange(*keys)
-            )
+            out = _range_sorted(df, keys, n_files)
         mp = _mapping_of(m)
         new_files = _write_data_files(self.spark, self.path, out, mapping=mp)
-        manifest = {
-            "version": base + 1,
-            "op": "compact",
-            "key_field": keys[0],
-            "key_fields": keys,
-            "schema": m["schema"],
-            "files": _stat_entries(self.path, new_files, keys[0], mp),
-            **_fmt_fields(mp),
-        }
-        if cluster_by:
-            manifest["clustered_by"] = list(cluster_by)
-        rolled = _rolled_meta(m, None)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
+        version = self._commit(
+            m,
+            "compact",
+            _stat_entries(self.path, new_files, keys[0], mp),
+            **({"clustered_by": list(cluster_by)} if cluster_by else {}),
+        )
         return {
-            "version": base + 1,
+            "version": version,
             "before": len(m["files"]),
             "after": len(new_files),
         }
@@ -2080,17 +1831,14 @@ class TxnTable:
                     f"segments separately (…, {v - 1}] and [{v}, …) or "
                     "re-seed the consumer from a snapshot"
                 )
-            schema = StructType.fromJson(json.loads(m["schema"]))
+            # version 0 diffs against an empty snapshot of itself
+            prev_m = self._manifest(v - 1) if v > 0 else {**m, "files": []}
             # entry identity includes the deletion-vector reference: a
             # DV delete changes a file's VISIBLE rows without changing
             # its path, so (path, dv) is what "same content" means here
-            prev_ids = (
-                {_entry_id(f) for f in self._manifest(v - 1)["files"]}
-                if v > 0
-                else set()
-            )
+            prev_ids = {_entry_id(f) for f in prev_m["files"]}
             added = [f for f in m["files"] if _entry_id(f) not in prev_ids]
-            new = self._read_entries(schema, added, mapping=_mapping_of(m))
+            new = self._read_entries(_schema_of(m), added, mapping=_mapping_of(m))
             if not precise:
                 if op in ("delete", "overwrite", "apply_changes", "restore"):
                     raise ValueError(
@@ -2107,28 +1855,14 @@ class TxnTable:
                 )
                 continue
             cur_ids = {_entry_id(f) for f in m["files"]}
-            removed = (
-                [
-                    f
-                    for f in self._manifest(v - 1)["files"]
-                    if _entry_id(f) not in cur_ids
-                ]
-                if v > 0
-                else []
-            )
-            prev_m = self._manifest(v - 1) if v > 0 else m
-            old_schema = (
-                StructType.fromJson(json.loads(prev_m["schema"]))
-                if v > 0
-                else schema
-            )
+            removed = [f for f in prev_m["files"] if _entry_id(f) not in cur_ids]
             old = self._read_entries(
-                old_schema, removed, mapping=_mapping_of(prev_m)
+                _schema_of(prev_m), removed, mapping=_mapping_of(prev_m)
             )
             parts.append(_keyed_diff(new, old, _keys(m), v, preimages))
         if not parts:
             m = self._manifest(end)
-            schema = StructType.fromJson(json.loads(m["schema"]))
+            schema = _schema_of(m)
             empty = self.spark.createDataFrame([], schema)
             return empty.select(
                 "*",
@@ -2164,21 +1898,14 @@ class TxnTable:
         version with the postimage, so letting it into the
         latest-per-key window would make the winner arbitrary."""
         changes = changes.where(F.col("_change_type") != "update_preimage")
-        base = self.version()
-        m = self._manifest(base)
+        m = self._manifest()
         keys = _keys(m)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        mp = _mapping_of(m)
-        if merge_schema:
-            before = {f.name for f in schema.fields}
-            schema = _evolved_schema(
-                changes.drop("_change_type", "_commit_version"),
-                schema,
-                self.path,
-            )
-            mp = _extended_mapping(
-                mp, schema, [f.name for f in schema.fields if f.name not in before]
-            )
+        schema, mp = self._write_schema(
+            m,
+            changes.drop("_change_type", "_commit_version"),
+            merge_schema,
+            check=False,
+        )
         w = Window.partitionBy(*keys).orderBy(F.desc("_commit_version"))
         latest = (
             changes.withColumn("_rn", F.row_number().over(w))
@@ -2187,75 +1914,38 @@ class TxnTable:
         )
         latest.persist()
         try:
-            bounds = latest.agg(
-                *_key_bound_aggs(keys), F.count(F.lit(1)).alias("n")
-            ).collect()[0]
-            if bounds["n"] == 0:
-                if meta is None:
-                    return {
-                        "version": base,
-                        "rewritten": 0,
-                        "kept": len(m["files"]),
-                    }
-                # empty feed but metadata to record (sync bookkeeping):
-                # publish a data-free commit carrying the same files
-                self._commit(
-                    base + 1,
-                    {
-                        "version": base + 1,
-                        "op": "apply_changes",
-                        "key_field": keys[0],
-                        "key_fields": keys,
-                        "schema": schema.json(),
-                        "files": m["files"],
-                        "meta": _rolled_meta(m, meta),
-                        **_fmt_fields(mp),
-                    },
-                )
-                return {
-                    "version": base + 1,
-                    "rewritten": 0,
-                    "kept": len(m["files"]),
-                }
+            n, touched = _touched_by_keys(latest, m["files"], keys, schema, mp)
+            if n == 0:
+                version = m["version"]
+                if meta is not None:
+                    # empty feed but metadata to record (sync
+                    # bookkeeping): a data-free commit of the same files
+                    version = self._commit(
+                        m,
+                        "apply_changes",
+                        m["files"],
+                        schema=schema.json(),
+                        mapping=mp,
+                        meta=meta,
+                    )
+                return {"version": version, "rewritten": 0, "kept": len(m["files"])}
             ups = latest.where(F.col("_change_type") != "delete").select(
                 *[f.name for f in schema.fields]
             )
-            self._enforce(ups, m)
             dels = latest.where(F.col("_change_type") == "delete").select(*keys)
-            touched, kept = [], []
-            if bounds["lo0"] is None:  # all-NULL keys: nothing matches
-                kept = list(m["files"])
-            else:
-                touched, kept = _split_by_delta_bounds(
-                    m["files"], keys, bounds, schema, mp
-                )
-            if touched:
-                old = self._read_entries(schema, touched, mapping=mp)
-                surviving = old.join(dels, on=keys, how="left_anti")
-                merged = merge_dataframes(surviving, ups, keys)
-            else:
-                merged = ups
-            new_files = _write_data_files(
-                self.spark, self.path, merged, _constraints_of(m), mapping=mp
+            return self._change_rows(
+                m,
+                "apply_changes",
+                touched,
+                False,
+                rewrite=lambda old: merge_dataframes(
+                    old.join(dels, on=keys, how="left_anti"), ups, keys
+                ),
+                rows=ups,
+                schema=schema,
+                mapping=mp,
+                meta=meta,
             )
-            manifest = {
-                "version": base + 1,
-                "op": "apply_changes",
-                "key_field": keys[0],
-                "key_fields": keys,
-                "schema": schema.json(),
-                "files": kept + _stat_entries(self.path, new_files, keys[0], mp),
-                **_fmt_fields(mp),
-            }
-            rolled = _rolled_meta(m, meta)
-            if rolled:
-                manifest["meta"] = rolled
-            self._commit(base + 1, manifest)
-            return {
-                "version": base + 1,
-                "rewritten": len(touched),
-                "kept": len(kept),
-            }
         finally:
             latest.unpersist()
 
@@ -2272,38 +1962,32 @@ class TxnTable:
         reinstating pre-constraint rows unvalidated would put the table
         in silent violation of its own contract) — one scan of the
         restored files, and a violation refuses the restore."""
-        base = self.version()
+        cur = self._manifest()
         m = self._manifest(version)
-        cur = self._manifest(base)
-        constraints = (cur.get("meta") or {}).get(_CONSTRAINTS_KEY) or {}
+        constraints = _constraints_of(cur)
         if constraints:
-            schema = StructType.fromJson(json.loads(m["schema"]))
             _check_constraints(
                 self._read_entries(
-                    schema, m["files"], mapping=_mapping_of(m)
+                    _schema_of(m), m["files"], mapping=_mapping_of(m)
                 ),
                 constraints,
             )
-        manifest = {
-            "version": base + 1,
-            "op": "restore",
-            "key_field": _keys(m)[0],
-            "key_fields": _keys(m),
-            "schema": m["schema"],
-            "files": m["files"],
-            "restored_from": version,
-            # the mapping travels WITH the schema it names (restoring a
-            # pre-rename snapshot restores its logical names too)
-            **_fmt_fields(_mapping_of(m)),
-        }
-        # meta rolls from the CURRENT base, not the restored snapshot:
-        # a restore rewinds data, never exactly-once batch tracking
-        # (or a replayed stream batch would re-apply after a rollback)
-        rolled = _rolled_meta(cur, meta)
-        if rolled:
-            manifest["meta"] = rolled
-        self._commit(base + 1, manifest)
-        return {"version": base + 1, "restored_from": version}
+        # the version and meta roll from the CURRENT base, not the
+        # restored snapshot: a restore rewinds data, never exactly-once
+        # batch tracking (or a replayed stream batch would re-apply after
+        # a rollback); the mapping travels WITH the schema it names
+        # (restoring a pre-rename snapshot restores its logical names too)
+        new = self._commit(
+            cur,
+            "restore",
+            m["files"],
+            schema=m["schema"],
+            mapping=_mapping_of(m),
+            keys=_keys(m),
+            meta=meta,
+            restored_from=version,
+        )
+        return {"version": new, "restored_from": version}
 
     # -- maintenance -------------------------------------------------------
 
@@ -2331,27 +2015,25 @@ class TxnTable:
                 target.parent.mkdir(parents=True, exist_ok=True)
                 if not target.exists():
                     os.link(self.path / rel, target)
-        manifest = {
-            "version": 0,
-            "op": "create",
-            "key_field": m["key_field"],
-            "key_fields": _keys(m),
-            "schema": m["schema"],
-            "files": m["files"],
-            **_fmt_fields(_mapping_of(m)),
-            "meta": {
-                "cloned_from": str(self.path),
-                "cloned_version": m["version"],
-                # constraints are TABLE semantics and follow the branch;
-                # stream/sync batch tracking does not (see docstring)
-                **(
-                    {_CONSTRAINTS_KEY: (m.get("meta") or {})[_CONSTRAINTS_KEY]}
-                    if _CONSTRAINTS_KEY in (m.get("meta") or {})
-                    else {}
-                ),
-            },
+        meta = {
+            "cloned_from": str(self.path),
+            "cloned_version": m["version"],
+            # constraints are TABLE semantics and follow the branch;
+            # stream/sync batch tracking does not (see docstring)
+            **(
+                {_CONSTRAINTS_KEY: (m.get("meta") or {})[_CONSTRAINTS_KEY]}
+                if _CONSTRAINTS_KEY in (m.get("meta") or {})
+                else {}
+            ),
         }
-        _publish(dp, 0, manifest, backend=self.commit_backend)
+        _publish(
+            dp,
+            0,
+            _new_manifest(
+                0, "create", _keys(m), m["schema"], m["files"], _mapping_of(m), meta
+            ),
+            backend=self.commit_backend,
+        )
         return TxnTable(self.spark, dest, commit_backend=self.commit_backend)
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
@@ -2385,8 +2067,11 @@ class TxnTable:
         return _list_versions(self.path)
 
     def _manifest(self, version: int | None = None) -> dict:
+        """The manifest at ``version`` (default: the latest). Its
+        ``version`` field is the log position it was loaded from — the
+        number every commit built on it must follow."""
         v = self.version() if version is None else version
-        return _load_manifest(self.path, v)
+        return {**_load_manifest(self.path, v), "version": v}
 
 
 def sync_table(
@@ -2558,7 +2243,7 @@ class TxnMergeBackend(MergeIntoBackend):
             if dvd:
                 # Spark's part names never collide with the 5-digit
                 # links above
-                schema = StructType.fromJson(json.loads(m["schema"]))
+                schema = _schema_of(m)
                 t._read_entries(schema, dvd, mapping=mp).write.mode(
                     "append"
                 ).parquet(str(tmp))
@@ -2571,7 +2256,7 @@ class TxnMergeBackend(MergeIntoBackend):
         name = f"{dataset}.{table}"
         loc = snap.resolve().as_uri()
         spark.sql(f"CREATE DATABASE IF NOT EXISTS `{dataset}`")
-        schema = StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema_of(m)
         same_schema = spark.catalog.tableExists(name) and [
             (f.name, f.dataType) for f in spark.table(qual).schema.fields
         ] == [(f.name, f.dataType) for f in schema.fields]
@@ -2587,41 +2272,40 @@ class TxnMergeBackend(MergeIntoBackend):
             shutil.rmtree(d)
 
 
-def _key_bound_aggs(keys: list[str]) -> list[Column]:
-    """min/max aggregate columns for every merge-key dimension
-    (aliased lo0/hi0, lo1/hi1, ...)."""
-    out: list[Column] = []
-    for i, k in enumerate(keys):
-        out.append(F.min(k).alias(f"lo{i}"))
-        out.append(F.max(k).alias(f"hi{i}"))
-    return out
-
-
-def _split_by_delta_bounds(
+def _touched_by_keys(
+    df: DataFrame,
     files: list[dict],
     keys: list[str],
-    bounds,
-    schema: StructType | None = None,
-    mapping: "dict[str, str] | None" = None,
-) -> tuple[list[dict], list[dict]]:
-    """(touched, kept): files that could vs. cannot contain a delta key
-    tuple. A tuple matches only if EVERY dimension matches, so a file
-    disjoint from the delta's range on ANY key dimension is safely
-    kept — at two+ key columns this prunes strictly better than the
-    leading key alone (a low-cardinality leading key leaves the later
-    dimensions to do the real pruning). The disjointness test itself is
+    schema: StructType,
+    mapping: "dict[str, str]",
+) -> "tuple[int, list[dict]]":
+    """``(rows, touched)``: ``df``'s row count and the files that could
+    hold one of its key tuples, from ONE aggregation of its per-key
+    [min, max] — the free targeting of merge and apply_changes. A tuple
+    matches only if EVERY dimension matches, so a file disjoint from the
+    delta's range on ANY key dimension is safely skipped — at two+ key
+    columns this prunes strictly better than the leading key alone (a
+    low-cardinality leading key leaves the later dimensions to do the
+    real pruning). The disjointness test itself is
     :func:`_prune_by_ranges` — ONE authoritative predicate shared with
     ``read(ranges=)``, conservative on missing stats and legacy
-    manifests."""
+    manifests. When every row's LEADING key is NULL nothing is touched:
+    NULL never equals a stored key, so all rows insert (the same outcome
+    a null-key row gets when a non-null sibling key forces the rewrite
+    path; consistent, no silent drop)."""
+    bounds = df.agg(
+        *[F.min(k).alias(f"lo{i}") for i, k in enumerate(keys)],
+        *[F.max(k).alias(f"hi{i}") for i, k in enumerate(keys)],
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    if bounds["n"] == 0 or bounds["lo0"] is None:
+        return bounds["n"], []
     ranges = {
         k: (bounds[f"lo{i}"], bounds[f"hi{i}"])
         for i, k in enumerate(keys)
         if bounds[f"lo{i}"] is not None
     }
-    touched = _prune_by_ranges(files, ranges, keys[0], schema, mapping)
-    touched_paths = {f["path"] for f in touched}
-    kept = [f for f in files if f["path"] not in touched_paths]
-    return touched, kept
+    return bounds["n"], _prune_by_ranges(files, ranges, keys[0], schema, mapping)
 
 
 def _rolled_meta(base_manifest: dict, meta: "dict | None") -> "dict | None":
@@ -2636,6 +2320,58 @@ def _rolled_meta(base_manifest: dict, meta: "dict | None") -> "dict | None":
     if meta:
         rolled.update(meta)
     return rolled or None
+
+
+def _new_manifest(
+    version: int,
+    op: str,
+    keys: "list[str]",
+    schema: str,
+    files: "list[dict]",
+    mapping: "dict[str, str] | None" = None,
+    meta: "dict | None" = None,
+    **extra: Any,
+) -> dict:
+    """THE manifest builder every commit goes through (the TxnTable
+    verbs, ``create``/``clone``, the ``gcpde_txn`` SQL writer): the
+    fields every snapshot carries, the column mapping only while one is
+    active (unmapped tables stay readable by format-v1 readers),
+    ``meta`` only when non-empty, plus op-specific ``extra`` fields
+    (``restored_from``, ``clustered_by``). :func:`_publish` stamps
+    ``ts``, ``format_version``, ``commit_id`` and bloom filters."""
+    manifest = {
+        "version": version,
+        "op": op,
+        "key_field": keys[0],
+        "key_fields": keys,
+        "schema": schema,
+        "files": files,
+        **({"column_mapping": mapping} if mapping else {}),
+        **extra,
+    }
+    if meta:
+        manifest["meta"] = meta
+    return manifest
+
+
+def _schema_of(m: dict) -> StructType:
+    return StructType.fromJson(json.loads(m["schema"]))
+
+
+def _range_sorted(df: DataFrame, keys: "list[str]", n_files: "int | None") -> DataFrame:
+    """``df`` range-partitioned on the merge key (``n_files`` pins the
+    partition count): narrow, disjoint per-file key ranges are what
+    MERGE's file pruning feeds on."""
+    if n_files:
+        return df.repartitionByRange(n_files, *keys)
+    return df.repartitionByRange(*keys)
+
+
+def _match_cond(predicate: "Column | str") -> Column:
+    """A DELETE/UPDATE predicate under SQL ternary semantics: NULL
+    never matches."""
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    return F.coalesce(pred, F.lit(False))
 
 
 def _keys(m: dict) -> list[str]:

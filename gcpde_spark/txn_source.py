@@ -55,11 +55,11 @@ from gcpde_spark.cdf_source import _file_columns, _FilePartition
 from gcpde_spark.errors import SchemaMismatchException
 from gcpde_spark.txn import (
     _constraints_of,
-    _fmt_fields,
     _keys,
     _list_versions,
     _load_manifest,
     _mapping_of,
+    _new_manifest,
     _norm_bound,
     _phys,
     _pruned_entries,
@@ -411,8 +411,9 @@ class TxnTableWriter(DataSourceArrowWriter):
                 # same refusal as __init__, re-run per attempt: a rival
                 # add_constraint landing mid-job must not let this
                 # commit roll the constraint forward over rows it never
-                # validated (TxnTable verbs re-enforce per attempt via
-                # _enforce; this loop is the SQL path's equivalent)
+                # validated (TxnTable verbs re-enforce per attempt
+                # before every write; this loop is the SQL path's
+                # equivalent)
                 self.abort(messages)
                 raise ValueError(
                     f"table at {self.root} gained CHECK constraints "
@@ -422,20 +423,15 @@ class TxnTableWriter(DataSourceArrowWriter):
                 )
             mp = _mapping_of(m)
             entries = _stat_entries(self.root, rels, _keys(m)[0], mp)
-            manifest = {
-                "version": base + 1,
-                "op": "overwrite" if self.overwrite else "append",
-                "key_field": _keys(m)[0],
-                "key_fields": _keys(m),
-                "schema": m["schema"],
-                "files": entries
-                if self.overwrite
-                else list(m["files"]) + entries,
-                **_fmt_fields(mp),
-            }
-            rolled = _rolled_meta(m, None)
-            if rolled:
-                manifest["meta"] = rolled
+            manifest = _new_manifest(
+                base + 1,
+                "overwrite" if self.overwrite else "append",
+                _keys(m),
+                m["schema"],
+                entries if self.overwrite else list(m["files"]) + entries,
+                mp,
+                _rolled_meta(m, None),
+            )
             try:
                 _publish(self.root, base + 1, manifest, backend=backend)
                 return

@@ -2667,11 +2667,16 @@ def test_video_codec_info_dataframe(spark):
         _make_sps(profile=66, w_mbs=120, h_mbs=68, crop=(0, 0, 0, 4)),
         w=1920, h=1080,
     )
+    # a dotted column name must pass through untouched (not re-parsed
+    # as a nested field)
     df = spark.createDataFrame(
-        [("v.mp4", bytearray(mp4)), ("junk.bin", bytearray(b"not an mp4"))],
-        "path string, content binary",
+        [("v.mp4", bytearray(mp4), 1), ("junk.bin", bytearray(b"not an mp4"), 2)],
+        "path string, content binary, `a.b` int",
     )
-    out = {r.path: r for r in video_codec_info(df).collect()}
+    got = video_codec_info(df)
+    assert got.columns[:3] == ["path", "content", "a.b"]
+    out = {r.path: r for r in got.collect()}
+    assert out["v.mp4"]["a.b"] == 1
     assert out["v.mp4"].codec == "avc1"
     assert out["v.mp4"].coded_width == 1920
     assert out["v.mp4"].coded_height == 1080

@@ -173,13 +173,17 @@ def test_sessionize_splits_on_gap(spark):
     rows = [
         (1, T(0)), (1, T(10)), (1, T(50)),  # gap 40 min -> new session
         (2, T(0)),
+        # 1800.5 s exceeds a 1800 s gap: whole-second gaps would merge them
+        (3, T(0)), (3, T(30) + datetime.timedelta(milliseconds=500)),
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
     got = {
         (r.user_id, r.ts.minute): r.session_id
         for r in sessionize(df, gap_s=1800).collect()
     }
-    assert got == {(1, 0): 1, (1, 10): 1, (1, 50): 2, (2, 0): 1}
+    assert got == {
+        (1, 0): 1, (1, 10): 1, (1, 50): 2, (2, 0): 1, (3, 0): 1, (3, 30): 2,
+    }
 
 
 def test_interval_join_matches_naive_reference_on_random_inputs(spark):

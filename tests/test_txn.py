@@ -1714,3 +1714,79 @@ def test_purge_vectors_rewrites_only_vector_carrying_files(spark, tmp_path):
     t2.delete(F.col("id") < 300, mode="dv")
     rec2 = t2.maybe_compact(target_files=4)
     assert rec2 is not None and "purged_files" in rec2
+
+
+
+# Spark job ids per verb call on the etl_upsert-shaped table of
+# _orders_16 (16 files, 15k rows), measured on a 4-core VM under this
+# suite's session (8 shuffle partitions). AQE splits each shuffling
+# action into one job per stage, so these count job ids, not actions.
+# A default (copy-on-write) merge: the delta-bounds aggregation and the
+# merge write — the same 7 before and after the row-change kernel, which
+# must not add a persist, a count or a routing scan to this path.
+_COW_MERGE_JOBS = 7
+# update(mode="rewrite"): the per-file match-count scan and the write.
+# Before the kernel it also ran a separate count() of the matched rows,
+# 5 job ids in all.
+_REWRITE_UPDATE_JOBS = 3
+
+
+def _job_ids(spark, fn):
+    """(result, job ids) of ``fn()`` run under a fresh job group; the
+    caller's group and description are restored afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description")
+    saved = [sc.getLocalProperty(p) for p in props]
+    gid = f"txn-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job count probe")
+    try:
+        out = fn()
+    finally:
+        for p, v in zip(props, saved):
+            sc.setLocalProperty(p, v)
+    return out, sc.statusTracker().getJobIdsForGroup(gid)
+
+
+def _orders_16(spark, path):
+    orders = spark.range(15_000).select(
+        F.col("id").alias("o_orderkey"),
+        (F.col("id") % 1500).alias("o_custkey"),
+        (F.col("id") * 1.25).alias("o_totalprice"),
+    )
+    return TxnTable.create(
+        spark, str(path), orders, key_field="o_orderkey", n_files=16
+    )
+
+
+def test_default_merge_job_count_is_pinned(spark, tmp_path):
+    """A 500-row delta (400 updated keys spread over the key range, 100
+    new) merged into a 16-file table, as one etl_upsert op does: the
+    default merge touches every file and runs a fixed number of jobs."""
+    t = _orders_16(spark, tmp_path / "t")
+    keys = list(range(0, 15_000, 37))[:400] + list(range(15_000, 15_100))
+    delta = spark.createDataFrame(
+        [(k, k % 1500, 1_000_000.0 + i) for i, k in enumerate(keys)],
+        "o_orderkey long, o_custkey long, o_totalprice double",
+    )
+    receipt, jobs = _job_ids(spark, lambda: t.merge(delta))
+    assert receipt == {"version": 1, "rewritten": 16, "kept": 0}
+    assert len(jobs) <= _COW_MERGE_JOBS, jobs
+    assert t.read().count() == 15_100
+
+
+def test_rewrite_update_job_count_is_pinned(spark, tmp_path):
+    """update(mode="rewrite") takes its matched-row count from the
+    targeting scan: no second count job over the touched files."""
+    t = _orders_16(spark, tmp_path / "t")
+    receipt, jobs = _job_ids(
+        spark,
+        lambda: t.update(
+            {"o_totalprice": "o_totalprice + 1"},
+            "o_orderkey between 1000 and 2999",
+            mode="rewrite",
+        ),
+    )
+    assert receipt["updated_rows"] == 2000 and receipt["kept"] == 13
+    assert len(jobs) <= _REWRITE_UPDATE_JOBS, jobs
