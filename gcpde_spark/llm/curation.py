@@ -16,12 +16,7 @@ from pyspark.sql.types import NumericType
 _NUMERIC_TYPES = (NumericType,)
 
 from gcpde_spark.llm.dedup import _exploded_shingles
-from gcpde_spark.llm.text import (
-    auto_collapse,
-    collapse_reps,
-    normalize_text,
-    round4,
-)
+from gcpde_spark.llm.text import normalize_text, round4
 
 
 def _nullsafe_broadcast_join(
@@ -52,7 +47,6 @@ def decontaminate(
     bench_text_col: str = "text",
     n: int = 8,
     min_shared: int = 1,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: flag training docs that share ≥
     ``min_shared`` distinct word-``n``-grams with any benchmark item
@@ -79,23 +73,8 @@ def decontaminate(
     one bounded full-corpus exchange whose cost never depends on how
     contaminated the corpus turns out to be.
     """
-    # ROUND 10, measured duplicate-collapse route (auto by
-    # text_dup_ratio ≥ 3×): n_shared_ngrams is a pure function of the
-    # text, so on an exact-duplicate-heavy corpus the shingle explosion
-    # + overlap join — the dominant stages — run once per DISTINCT text
-    # and the per-text verdict joins back to every member id by md5
-    # fingerprint (skinny join; NULL-text rows keep a NULL fp, miss the
-    # left join and stay n_shared=0, exactly the direct path's
-    # no-shingle behavior). A replica-free corpus keeps the direct
-    # shape: the rep aggregate would add a full-text exchange for
-    # nothing.
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(docs, text_col)
-    sh_src = (
-        collapse_reps(docs, id_col, text_col).persist() if dedup_collapse else docs
-    )
     doc_sh = (
-        _exploded_shingles(sh_src, id_col, text_col, n)
+        _exploded_shingles(docs, id_col, text_col, n)
         .select("_vid", F.xxhash64("_s").alias("_h"))
         .distinct()
     )
@@ -109,19 +88,7 @@ def decontaminate(
         .groupBy("_vid")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_ngrams"))
     )
-    if dedup_collapse:
-        shared_by_fp = shared.join(
-            sh_src.select("_fp", F.col(id_col).alias("_vid")), "_vid"
-        ).select("_fp", "n_shared_ngrams")
-        out = (
-            docs.withColumn("_fp", F.md5(F.col(text_col)))
-            .join(shared_by_fp, "_fp", "left")
-            .drop("_fp")
-        )
-    else:
-        out = docs.join(
-            shared, docs[id_col] == shared["_vid"], "left"
-        ).drop("_vid")
+    out = docs.join(shared, docs[id_col] == shared["_vid"], "left").drop("_vid")
     return out.withColumn(
         "n_shared_ngrams", F.coalesce(F.col("n_shared_ngrams"), F.lit(0).cast("bigint"))
     ).withColumn("contaminated", F.col("n_shared_ngrams") >= min_shared)
@@ -376,7 +343,6 @@ def exact_dedup_keep(
     text_col: str = "text",
     keep: str = "min_id",
     quality_col: str | None = None,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Exact dedup on normalized text with an explicit survivor policy:
 
@@ -397,27 +363,6 @@ def exact_dedup_keep(
     }
     if keep not in order:
         raise ValueError(f"keep must be one of {sorted(order)}, got {keep!r}")
-    # Duplicate collapse (measured auto route) for the policies that are
-    # pure functions of (text, id): within a raw-text group every text
-    # (hence its length) is equal, so the group's best candidate under
-    # (len desc, id asc) or (id asc) is its MIN id — the representative.
-    # Running the normalized window over representatives therefore picks
-    # the same survivor ids; one semi-join restores the full rows.
-    # max_quality ranks on a non-text column and keeps the direct path.
-    if keep in ("min_id", "longest"):
-        if dedup_collapse is None:
-            dedup_collapse = auto_collapse(df, text_col)
-        if dedup_collapse:
-            reps = collapse_reps(df, id_col, text_col)
-            w = Window.partitionBy(F.md5(normalize_text(text_col))).orderBy(
-                *order[keep]
-            )
-            winners = (
-                reps.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .select(id_col)
-            )
-            return df.join(winners, id_col, "left_semi")
     w = Window.partitionBy(F.md5(normalize_text(text_col))).orderBy(*order[keep])
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -540,11 +485,6 @@ def corpus_report(
     # carry stats columns from an earlier with_text_stats pass, and
     # re-adding them would make every reference ambiguous
     keep = list(dict.fromkeys([*strata, id_col, text_col]))
-    # stats AND the dup fingerprint go through ONE _with_text_cols call:
-    # on a duplicate-heavy corpus (measured auto route) the whole
-    # regex-heavy projection — including md5(normalize) — evaluates once
-    # per distinct text; a separate withColumn would leave the
-    # normalize+md5 pass running per replica row.
     norm = normalize_text(text_col)
     enriched = _with_text_cols(
         df.select(*keep),

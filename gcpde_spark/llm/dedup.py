@@ -26,10 +26,7 @@ from pyspark.sql import functions as F
 
 from gcpde_spark.llm.text import (
     _with_text_cols,
-    auto_collapse,
-    collapse_reps,
     normalize_text,
-    round4,
     spread,
     tokens,
 )
@@ -77,32 +74,10 @@ def exact_dedup_groups(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Dedup *accounting*: one row per distinct normalized text with the
     surviving id and the copy count — the audit view of :func:`exact_dedup`.
-
-    Duplicate collapse (measured auto route): raw-md5 groups refine the
-    normalized-md5 groups, so a raw pre-aggregate carrying (min id,
-    count) feeds the normalized aggregate exactly — ``keep_id`` =
-    min-over-group-mins, ``n_copies`` = sum-of-group-counts — and the
-    normalize regex (the per-row cost) runs once per DISTINCT raw text.
     """
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    if dedup_collapse:
-        pre = df.groupBy(F.md5(F.col(text_col)).alias("_rfp")).agg(
-            F.min(id_col).alias("_mid"),
-            F.count(F.lit(1)).alias("_n"),
-            F.first(F.col(text_col)).alias(text_col),
-        )
-        return (
-            pre.groupBy(F.md5(normalize_text(text_col)).alias("fp"))
-            .agg(
-                F.min("_mid").alias("keep_id"),
-                F.sum("_n").cast("bigint").alias("n_copies"),
-            )
-        )
     return (
         df.groupBy(F.md5(normalize_text(text_col)).alias("fp"))
         .agg(
@@ -190,7 +165,6 @@ def _bucket_pairs(
     key_cols: list[str],
     payload: str = "_id",
     max_bucket_size: int | None = None,
-    distinct: bool = True,
 ) -> DataFrame:
     """Candidate ``(id_a, id_b)`` pairs from hash buckets, computing the
     bucketed input ONCE.
@@ -239,10 +213,6 @@ def _bucket_pairs(
     # ids are strictly ordered (unique id in every payload shape), so
     # "all b > a" ≡ "the sorted suffix past a's position": explode with
     # position, slice the suffix, explode the slice.
-    # ``distinct=False`` skips the final dedup exchange for callers whose
-    # buckets are disjoint id sets (e.g. one bucket per text fingerprint)
-    # — there a pair can only be emitted once and the distinct would
-    # shuffle the full quadratic pair stream for nothing.
     pairs = grouped.selectExpr(
         "_ids", "posexplode(_ids) AS (_i, id_a)"
     ).selectExpr(
@@ -250,57 +220,7 @@ def _bucket_pairs(
         # slice() is 1-based; + 2 skips self
         "explode(slice(_ids, _i + 2, size(_ids) - _i - 1)) AS id_b",
     )
-    return pairs.distinct() if distinct else pairs
-
-
-def _rep_members(df: DataFrame, id_col: str, text_col: str, reps: DataFrame) -> DataFrame:
-    """``(_vid, _rid)`` — every original id keyed by its text group's
-    representative id. Equi-join on the md5 fingerprint, so NULL-text
-    rows (NULL fp) drop out — exactly the ids that produce no shingles
-    and no signature on the direct paths."""
-    fps = df.select(
-        F.col(id_col).alias("_vid"), F.md5(F.col(text_col)).alias("_fp")
-    )
-    return fps.join(
-        reps.select("_fp", F.col(id_col).alias("_rid")), "_fp"
-    ).select("_vid", "_rid")
-
-
-def _expand_rep_pairs(
-    members: DataFrame, rep_pairs: DataFrame, intra_value
-) -> DataFrame:
-    """Expand representative-level near-dup verdicts to id-level pairs.
-
-    The guide-§8 "attach the decision once" step of the duplicate
-    collapse: identical texts have identical signatures, so (a) every
-    verified rep pair (ra, rb, v) holds verbatim for every cross pair of
-    their member ids, and (b) every same-text pair is a near-dup with
-    the degenerate value ``intra_value`` (Jaccard 1.0 / Hamming 0).
-    Cross pairs and intra pairs are disjoint (different vs equal
-    fingerprint) and each id pair arises exactly once (each id belongs
-    to one group), so the union needs no dedup.
-
-    ``members``: ``(_vid, _rid)`` from :func:`_rep_members`;
-    ``rep_pairs``: ``(id_a, id_b, <value…>)`` over representative ids.
-    """
-    value_cols = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
-    a = members.select(F.col("_rid").alias("id_a"), F.col("_vid").alias("_ia"))
-    b = members.select(F.col("_rid").alias("id_b"), F.col("_vid").alias("_ib"))
-    cross = (
-        rep_pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            F.least("_ia", "_ib").alias("id_a"),
-            F.greatest("_ia", "_ib").alias("id_b"),
-            *value_cols,
-        )
-    )
-    # same-text pairs: one disjoint bucket per representative, so the
-    # pair stream is already duplicate-free — skip the distinct exchange
-    intra = _bucket_pairs(
-        members, ["_rid"], payload="_vid", distinct=False
-    ).select("id_a", "id_b", *[v.alias(n) for n, v in intra_value.items()])
-    return cross.unionByName(intra)
+    return pairs.distinct()
 
 
 def _minhash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
@@ -390,7 +310,6 @@ def minhash_near_dup_pairs(
     threshold: float = 0.7,
     seed: int = 42,
     max_bucket_size: int | None = None,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by banded MinHash-LSH, verified exactly.
 
@@ -405,49 +324,10 @@ def minhash_near_dup_pairs(
 
     Returns ``(id_a, id_b, jaccard)``.
 
-    ``dedup_collapse`` (round 10, measured route — default auto by
-    :func:`text_dup_ratio` ≥ 3×): on exact-duplicate-heavy corpora the
-    whole LSH+verify pipeline runs at the DISTINCT-TEXT level and the
-    verdicts expand back to id pairs in one join
-    (:func:`_expand_rep_pairs`). Identical texts have identical
-    signatures, hence identical band buckets, so the id-level candidate
-    set is exactly (rep-level candidates × their member ids) ∪
-    (same-text pairs), and Jaccard is a pure function of the two texts
-    — output row set provably identical to the direct path (pinned by
-    tests/test_llm.py route-parity tests). A 100×-replicated corpus
-    pays ~1/100th of the shingle/signature/verification work and skips
-    the quadratic pre-distinct band-pair stream entirely. Off when
-    ``max_bucket_size`` is set: the cap is defined on id-level bucket
-    depth and rep-level buckets would cap differently.
+    Every row pays the shingle, signature and verification work, and
+    exact-duplicate texts pair with each other (Jaccard 1.0): an
+    ``m``-replica text yields ``m(m-1)/2`` candidate and verified pairs.
     """
-    if max_bucket_size is None:
-        route = (
-            dedup_collapse
-            if dedup_collapse is not None
-            else auto_collapse(df, text_col)
-        )
-        if route:
-            reps = collapse_reps(df, id_col, text_col).persist()
-            rep_pairs = minhash_near_dup_pairs(
-                reps.select(id_col, text_col),
-                id_col,
-                text_col,
-                num_hashes,
-                bands,
-                shingle_size,
-                threshold,
-                seed,
-                None,
-                dedup_collapse=False,
-            )
-            members = _rep_members(df, id_col, text_col, reps)
-            out = _expand_rep_pairs(
-                members, rep_pairs, {"jaccard": round4(F.lit(1.0))}
-            )
-            # cross pairs are already threshold-filtered by the inner
-            # call; re-filtering the union keeps the intra branch exact
-            # for any threshold (1.0 passes every threshold ≤ 1)
-            return out.where(F.col("jaccard") >= threshold)
     rows_per_band = num_hashes // bands
     sig = _minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_size, seed
@@ -465,16 +345,8 @@ def minhash_near_dup_pairs(
     candidates = _bucket_pairs(
         skinny, ["band_idx", "band_hash"], max_bucket_size=max_bucket_size
     )
-    # when the pair route is capped (max_bucket_size) the verification
-    # collapse is still independent and keeps its own auto route
     return _verify_jaccard(
-        df,
-        candidates,
-        id_col,
-        text_col,
-        shingle_size,
-        threshold,
-        dedup_collapse=dedup_collapse if max_bucket_size is not None else False,
+        df, candidates, id_col, text_col, shingle_size, threshold
     )
 
 
@@ -484,15 +356,11 @@ def ngram_jaccard_pairs(
     id_col: str,
     text_col: str = "text",
     n: int = 3,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Exact word-``n``-gram Jaccard for given candidate ``(id_a, id_b)``
     pairs — the verification primitive, also usable standalone when the
     candidate set comes from elsewhere (same source, same URL, …)."""
-    return _verify_jaccard(
-        df, pairs, id_col, text_col, n, threshold=None,
-        dedup_collapse=dedup_collapse,
-    )
+    return _verify_jaccard(df, pairs, id_col, text_col, n, threshold=None)
 
 
 def _verify_jaccard(
@@ -502,7 +370,6 @@ def _verify_jaccard(
     text_col: str,
     n: int,
     threshold: float | None,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs via explode + count joins.
 
@@ -520,22 +387,16 @@ def _verify_jaccard(
     - ``ex`` (the distinct skinny shingle set) feeds both per-side joins
       and the size aggregate; persisting turns 3 shingle explosions into
       1 (measured: l07 3.9 s → 2.3 s, l05 2.4 s → 1.3 s at sf0.1).
-      Skinny rows spill safely at any scale; LRU eviction reclaims both
-      caches after the query.
+      Skinny rows spill safely at any scale.
+
+    Neither cache is released when the call returns: both stay in the
+    session's block store until LRU eviction or ``unpersist``, and a
+    later call over the same input reuses them. On the 500-document
+    ``llm_curate`` input the first ``dedup_clusters`` call runs 27 Spark
+    job ids and each later call 13; releasing the caches would put every
+    call on the 27-id path.
     """
     pairs = pairs.persist()
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    # ROUND 10, measured route: under the collapse every consumer of
-    # ``ex``/``sizes`` below references REPRESENTATIVE ids only (the
-    # canonical pairs and the equal-fingerprint branch both key on the
-    # per-fingerprint min id), so on a duplicate-heavy corpus the
-    # shingle explosion — the dominant verification stage — only needs
-    # one row per DISTINCT text. ``collapse_reps`` picks the same min-id
-    # representative as the ``reps`` map below, so the shingle set is
-    # keyed identically; a replica-free corpus keeps the direct explode
-    # (the rep aggregate would add a full-text exchange for nothing).
-    ex_src = collapse_reps(df, id_col, text_col) if dedup_collapse else df
     # The shingle set scales WITH THE CORPUS — it is never broadcast-
     # small by construction. The static planner (AQE off) has no size
     # estimate for this derived subplan and guesses broadcastable; at
@@ -545,119 +406,36 @@ def _verify_jaccard(
     # (user hints take precedence over runtime re-planning): on a tiny
     # corpus this trades a minor SMJ-vs-broadcast penalty (measured
     # ~0.3 s at sf0.1) for guaranteed OOM-safety at every scale.
-    ex = _exploded_shingles(ex_src, id_col, text_col, n).distinct().persist()
+    ex = _exploded_shingles(df, id_col, text_col, n).distinct().persist()
     sizes = ex.groupBy("_vid").agg(F.expr("count(1) AS _n"))
 
-    def _score(key_pairs: DataFrame) -> DataFrame:
-        """Exact Jaccard for ``(id_a, id_b)`` rows whose ids key ``ex``
-        — hint at the join sites (a hint on the persisted frame itself
-        also reaches its aggregate consumer, where it warns and does
-        nothing)."""
-        pa = key_pairs.join(
-            ex.selectExpr("_vid AS _ida", "_s").hint("merge"),
-            F.expr("id_a = _ida"),
-        ).select("id_a", "id_b", "_s")
-        inter = (
-            pa.join(
-                ex.selectExpr("_vid AS _idb", "_s AS _sb").hint("merge"),
-                F.expr("id_b = _idb AND _s = _sb"),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.expr("count(1) AS _inter"))
+    # hints at the join sites: a hint on the persisted frame itself also
+    # reaches its aggregate consumer, where it warns and does nothing
+    pa = pairs.join(
+        ex.selectExpr("_vid AS _ida", "_s").hint("merge"),
+        F.expr("id_a = _ida"),
+    ).select("id_a", "id_b", "_s")
+    inter = (
+        pa.join(
+            ex.selectExpr("_vid AS _idb", "_s AS _sb").hint("merge"),
+            F.expr("id_b = _idb AND _s = _sb"),
         )
-        # jaccard: round4's cross-engine rounding, as an expression string
-        return (
-            key_pairs.join(inter, ["id_a", "id_b"], "left")
-            .selectExpr("id_a", "id_b", "coalesce(_inter, 0) AS _inter")
-            .join(sizes.selectExpr("_vid AS id_a", "_n AS _na"), "id_a")
-            .join(sizes.selectExpr("_vid AS id_b", "_n AS _nb"), "id_b")
-            .selectExpr(
-                "id_a",
-                "id_b",
-                "round(CAST(_inter AS DOUBLE) / (_na + _nb - _inter) * 10000)"
-                " / 10000 AS jaccard",
-            )
+        .groupBy("id_a", "id_b")
+        .agg(F.expr("count(1) AS _inter"))
+    )
+    # jaccard: round4's cross-engine rounding, as an expression string
+    out = (
+        pairs.join(inter, ["id_a", "id_b"], "left")
+        .selectExpr("id_a", "id_b", "coalesce(_inter, 0) AS _inter")
+        .join(sizes.selectExpr("_vid AS id_a", "_n AS _na"), "id_a")
+        .join(sizes.selectExpr("_vid AS id_b", "_n AS _nb"), "id_b")
+        .selectExpr(
+            "id_a",
+            "id_b",
+            "round(CAST(_inter AS DOUBLE) / (_na + _nb - _inter) * 10000)"
+            " / 10000 AS jaccard",
         )
-
-    if not dedup_collapse:
-        # ROUND 11 (VERDICT r10 #1): the direct route scores the given
-        # pairs as-is — the round-9 plan, byte-identical. The
-        # fingerprint-canonicalization machinery below only pays when
-        # candidate pairs repeat text pairs; on a replica-free corpus
-        # every fingerprint is unique, ``same_fp`` is empty, and its 2
-        # persists + 4 extra joins were pure plan overhead (the driver's
-        # l05 regression, 0.843 → 1.11 s at sf0.1). Gating it on the
-        # same route flag as the shingle source makes "a replica-free
-        # corpus keeps the round-9 plans" true for this path too.
-        out = _score(pairs)
-        if threshold is not None:
-            out = out.where(F.col("jaccard") >= threshold)
-        return out
-
-    # FINGERPRINT COLLAPSE (round 10): shingle sets are a pure function
-    # of the text, so Jaccard only has to be computed once per distinct
-    # (text_a, text_b) pair — every id-level pair inherits its text
-    # pair's verdict, and an equal-fingerprint pair is J = 1.0 with no
-    # shingle work at all. This is the exact-dup-before-near-dup lever
-    # at the verification layer: corpora with heavy exact duplication
-    # (crawls; the 100×-replica bench data) hand the verifier millions
-    # of candidate pairs that are copies of a few thousand distinct
-    # text pairs. Measured at sf10 (27.3M candidate pairs, ~24.75M of
-    # them replica pairs): x03 678 → 160 s (−76%), x08 standalone
-    # 581 → 181 s (−69%), identical outputs; l05's oracle hash is
-    # bit-unchanged at sf0.01.
-    # Semantics preserved exactly: a pair is emitted iff BOTH sides
-    # have a shingle row (the sizes joins in ``_score`` are inner on
-    # both branches, matching the pre-collapse inner joins), and
-    # identical sets scored J = na/(na+na-na) = 1.0 before too.
-    # NULL-text ids have a NULL fingerprint, never join the rep map,
-    # and drop — they had no shingle rows before either.
-    fps = df.select(
-        F.col(id_col).alias("_vid"), F.md5(F.col(text_col)).alias("_fp")
     )
-    reps = fps.groupBy("_fp").agg(F.min("_vid").alias("_rep"))
-    cmap = fps.join(reps, "_fp").select("_vid", "_fp", "_rep").persist()
-    tagged = pairs.join(
-        cmap.select(
-            F.col("_vid").alias("id_a"),
-            F.col("_fp").alias("_fpa"),
-            F.col("_rep").alias("_ra"),
-        ),
-        "id_a",
-    ).join(
-        cmap.select(
-            F.col("_vid").alias("id_b"),
-            F.col("_fp").alias("_fpb"),
-            F.col("_rep").alias("_rb"),
-        ),
-        "id_b",
-    )
-    same_fp = tagged.where(F.col("_fpa") == F.col("_fpb"))
-    diff_fp = tagged.where(F.col("_fpa") != F.col("_fpb"))
-    canon = (
-        diff_fp.select(
-            F.least("_ra", "_rb").alias("id_a"),
-            F.greatest("_ra", "_rb").alias("id_b"),
-        )
-        .distinct()
-        .persist()
-    )
-
-    # exact Jaccard for the (small) canonical representative pairs
-    verdict = _score(canon).select(
-        F.col("id_a").alias("_ca"),
-        F.col("id_b").alias("_cb"),
-        "jaccard",
-    )
-    from_verify = diff_fp.join(
-        verdict,
-        (F.least("_ra", "_rb") == F.col("_ca"))
-        & (F.greatest("_ra", "_rb") == F.col("_cb")),
-    ).select("id_a", "id_b", "jaccard")
-    from_equal = same_fp.join(
-        sizes.select(F.col("_vid").alias("_ra"), "_n"), "_ra"
-    ).select("id_a", "id_b", round4(F.lit(1.0)).alias("jaccard"))
-    out = from_verify.unionByName(from_equal)
     if threshold is not None:
         out = out.where(F.col("jaccard") >= threshold)
     return out
@@ -742,7 +520,6 @@ def dedup_clusters(
     pairs: DataFrame | None = None,
     keep: str = "min_id",
     quality_col: str | None = None,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Full near-dup clustering: MinHash-LSH pairs → connected
     components → one row per document with its cluster representative.
@@ -767,75 +544,18 @@ def dedup_clusters(
     The non-default policies add one window over the (tiny) clustered
     subset — singleton documents never enter the window.
 
-    Components come from :func:`connected_components` on both routes,
-    so the verified edge list (direct route) or its contraction to one
-    vertex per distinct text (collapse route) must fit in driver memory,
-    about 16 bytes per edge for ``bigint`` ids.
-
-    ``dedup_collapse`` (round 10, measured auto route): contract every
-    exact-duplicate text group to one vertex before the components —
-    see the inline comment for the exactness argument. The route treats
-    same-text rows as one cluster member set, which is guaranteed only
-    for pair lists that include every same-text pair. The internal
-    generator always does (identical texts candidate-pair at Jaccard
-    1.0), so the auto route fires only when ``pairs`` is None; a
-    caller-supplied list may deliberately omit same-text pairs
-    (external candidate sources), so it takes the direct path unless
-    the caller opts in with an explicit ``dedup_collapse=True``
-    (round 11, ADVICE r10 — the auto default was a silent
-    data-dependent semantic change for such callers).
+    Components come from :func:`connected_components`, so the verified
+    edge list must fit in driver memory, about 16 bytes per edge for
+    ``bigint`` ids. Every same-text pair is one of those edges: an
+    ``m``-replica text sends its whole ``m(m-1)/2``-edge clique to the
+    driver, so the bound is set by the largest exact-duplicate groups,
+    not by the number of distinct texts.
     """
-    if dedup_collapse is None:
-        dedup_collapse = pairs is None and auto_collapse(df, text_col)
     if pairs is None:
         pairs = minhash_near_dup_pairs(
             df, id_col, text_col, num_hashes, bands, shingle_size, threshold, seed
         )
-    # Duplicate collapse (round 10, measured auto route): label the
-    # components of the QUOTIENT graph. On a replica-heavy corpus the
-    # id-level pair list is dominated by same-text cliques (C(m,2) edges
-    # per m-replica text); contracting every text group to one vertex
-    # (its min-id representative) before CC is exact, because a member's
-    # component is its group's component and the min reachable id equals
-    # the min over the component's groups of each group's min id — which
-    # is exactly what CC over rep vertices (each labelled by its rep id =
-    # group min id) computes. Three skinny integer joins shrink the
-    # clique-expanded edge list the driver collects to one edge per
-    # distinct text pair.
-    # Requires ``pairs`` to reference ids of non-NULL-text rows of
-    # ``df`` (true for every internal pair generator; NULL-text ids
-    # never produce shingles or signatures).
-    if dedup_collapse:
-        reps = collapse_reps(df, id_col, text_col)
-        members = _rep_members(df, id_col, text_col, reps)  # (_vid, _rid)
-        m_a = members.select(
-            F.col("_vid").alias("id_a"), F.col("_rid").alias("_ra")
-        )
-        m_b = members.select(
-            F.col("_vid").alias("id_b"), F.col("_rid").alias("_rb")
-        )
-        rep_edges = (
-            pairs.select("id_a", "id_b")
-            .join(m_a, "id_a")
-            .join(m_b, "id_b")
-            .where(F.col("_ra") != F.col("_rb"))
-            .select(F.col("_ra").alias("id_a"), F.col("_rb").alias("id_b"))
-            .distinct()
-        )
-        comp_rep = connected_components(rep_edges)
-        # groups absent from every cross edge (intra-only or singleton)
-        # keep the group min — the rep id itself
-        comp = (
-            members.join(comp_rep, members["_rid"] == comp_rep["id"], "left")
-            .select(
-                F.col("_vid").alias("id"),
-                F.coalesce(F.col("component"), F.col("_rid")).alias(
-                    "component"
-                ),
-            )
-        )
-    else:
-        comp = connected_components(pairs.select("id_a", "id_b"))
+    comp = connected_components(pairs.select("id_a", "id_b"))
     all_ids = df.selectExpr(f"{id_col} AS id").distinct()
     labeled = all_ids.join(comp, "id", "left").selectExpr(
         f"id AS {id_col}", "coalesce(component, id) AS component"
@@ -938,7 +658,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: the 64-bit hash is split into
     ``max_hamming + 1`` disjoint chunks, so any pair within the Hamming
@@ -951,36 +670,13 @@ def simhash_near_dup_pairs(
     a fixed split silently lost pairs beyond distance 3. Cost scales
     with the bound — ``max_hamming + 1`` bucket rows per doc, and
     narrower chunks collide more often (more candidates to verify).
-
-    ``dedup_collapse``: same measured distinct-text route as
-    :func:`minhash_near_dup_pairs` — identical texts have identical
-    SimHashes, so rep-level pairs expand exactly (cross pairs inherit
-    the rep Hamming distance, same-text pairs are distance 0, which is
-    within every valid ``max_hamming ≥ 0``). Off under
-    ``max_bucket_size`` for the same id-level-cap reason.
+    Exact-duplicate texts share every chunk, so an ``m``-replica text
+    yields ``m(m-1)/2`` pairs at Hamming distance 0.
     """
     if not 0 <= max_hamming <= 31:
         # > 31 → chunks of ≤1 bit: every doc collides with half the
         # corpus and the candidate join degenerates toward all-pairs.
         raise ValueError(f"max_hamming must be in [0, 31], got {max_hamming}")
-    if max_bucket_size is None:
-        route = (
-            dedup_collapse
-            if dedup_collapse is not None
-            else auto_collapse(df, text_col)
-        )
-        if route:
-            reps = collapse_reps(df, id_col, text_col).persist()
-            rep_pairs = simhash_near_dup_pairs(
-                reps.select(id_col, text_col),
-                id_col,
-                text_col,
-                max_hamming,
-                None,
-                dedup_collapse=False,
-            )
-            members = _rep_members(df, id_col, text_col, reps)
-            return _expand_rep_pairs(members, rep_pairs, {"hamming": F.lit(0)})
     n_chunks = max_hamming + 1
     width, extra = divmod(64, n_chunks)
     sim = _simhashes(df, id_col, text_col).withColumnRenamed("_sh_id", "_id")
@@ -1155,7 +851,6 @@ def bloom_dedup_new(
     expected_items: int | None = None,
     fpp: float = 0.01,
     exact: bool = False,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Incremental dedup of a ``new`` batch against an ``old`` corpus
     WITHOUT joining new×old: a Bloom filter over the old fingerprints
@@ -1175,30 +870,13 @@ def bloom_dedup_new(
     ``expected_items``: old-corpus cardinality for sizing; defaults to
     ``old.count()`` (one extra cheap metadata-friendly pass).
 
-    ``dedup_collapse`` (round 10, measured auto route — probed once on
-    ``new``; both sides are usually filters of the same corpus): a
-    Bloom bitmap is a ``bit_or`` fold, so duplicate keys contribute
-    nothing — the filter built from one fingerprint per DISTINCT raw
-    text is bit-identical to the full build, and the normalize regex
-    (the per-row cost) runs once per distinct text on the build side
-    with no join back at all. The same holds for the ``exact=True``
-    rescue anti-join's distinct old-fingerprint set; the new side
-    attaches its fingerprints through the standard rep-value join.
+    Every row of both sides pays the normalize regex that feeds its
+    fingerprint, replicas of one text included.
     """
-    fp = lambda d: F.md5(normalize_text(F.col(text_col)))  # noqa: E731
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(new, text_col)
+    fp = F.md5(normalize_text(F.col(text_col)))
     n = expected_items if expected_items is not None else old.count()
     m_bits, k = _bloom_sizing(n, fpp)
-    if dedup_collapse:
-        old_fp_src = (
-            old.groupBy(F.md5(F.col(text_col)).alias("_rfp"))
-            .agg(F.first(F.col(text_col)).alias(text_col))
-            .select(fp(None).alias("_fp"))
-        )
-    else:
-        old_fp_src = old.select(fp(old).alias("_fp"))
-    bloom = bloom_filter_table(old_fp_src, "_fp", m_bits, k)
+    bloom = bloom_filter_table(old.select(fp.alias("_fp")), "_fp", m_bits, k)
 
     probes = F.array(
         *[
@@ -1206,11 +884,8 @@ def bloom_dedup_new(
             for i in range(k)
         ]
     )
-    # value column named "_nfp": _with_text_cols uses "_fp" internally
-    # as its rep-join key
     new_fp = _with_text_cols(
-        new, text_col, {"_nfp": fp(new)}, dedup_collapse=dedup_collapse,
-        fanout=False,
+        new, text_col, {"_nfp": fp}, fanout=False
     ).withColumnRenamed("_nfp", "_fp")
     hits = (
         new_fp.select(F.col(id_col).alias("_pid"), F.explode(probes).alias("_pos"))
@@ -1239,10 +914,7 @@ def bloom_dedup_new(
     novel = new_fp.join(hits, new_fp[id_col] == hits["_pid"], "left_anti")
     if not exact:
         return novel.drop("_fp")
-    if dedup_collapse:
-        old_fps = old_fp_src.select(F.col("_fp").alias("_ofp")).distinct()
-    else:
-        old_fps = old.select(fp(old).alias("_ofp")).distinct()
+    old_fps = old.select(fp.alias("_ofp")).distinct()
     rescued = maybe_dup.join(
         old_fps, maybe_dup["_fp"] == old_fps["_ofp"], "left_anti"
     )

@@ -1043,9 +1043,10 @@ def _attach_struct(
     Arrow-batched ``pandas_udf`` returning one STRUCT column instead
     sends only ``in_cols`` to the worker and gets the tiny struct back;
     the payload columns never leave the JVM (``ArrowEvalPython`` zips
-    the struct onto the original rows positionally). Measured on the
-    media A/B harness (scripts/media_ab.py): ~half the Arrow boundary
-    bytes and see OPTIMIZATION_r11.md for wall-clock.
+    the struct onto the original rows positionally). Measured on a
+    768-row, 629 MB mp4 corpus: 629 MB sent and 629 MB returned per op
+    before, 629 MB sent and 0.2 MB returned after — the boundary round
+    trip halves; wall clock on one local process moved by at most 13%.
 
     ``parse`` takes one positional ``pd.Series`` per name in
     ``in_cols`` and returns a list of per-row dicts (missing keys →

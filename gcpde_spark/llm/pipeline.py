@@ -35,7 +35,6 @@ def curate_documents(
     classifier_weights: DataFrame | None = None,
     classifier_min_score: float = 0.5,
     classifier_n_buckets: int | None = None,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Standard curation: exact-dedup (keep smallest id per normalized
     text), drop short/low-quality docs, keep target languages; output
@@ -84,36 +83,13 @@ def curate_documents(
     # (execution of the compiled plan was 0.08 s). Materializing the two
     # shared columns under the window cut the tree to one copy of each.
     norm_col, toks_col = "_norm_text", "_toks"
-    # Duplicate collapse (round 10, measured auto route — same 3x
-    # threshold as the rest of llm/): pre-collapse to one row per
-    # distinct RAW text before the normalize/split projection and the
-    # dedup window. Equal raw text implies equal normalized text, so
-    # raw-md5 groups REFINE the window's normalized-md5 groups, and the
-    # representative is the group's MIN id — hence min-id-over-reps ==
-    # min-id-over-all-members and the surviving (id, normalized-text)
-    # set is exactly the direct path's. Every later stage (stats,
-    # language, LM, classifier, strata join — the strata join keys the
-    # ORIGINAL df by the surviving ids) is already per-survivor. On a
-    # replica-heavy crawl this shrinks the normalize+split projection
-    # AND the window exchange (which ships norm + token arrays) by the
-    # duplication ratio; a replica-free corpus keeps the certified
-    # round-9 plan.
-    if dedup_collapse is None:
-        from gcpde_spark.llm.text import auto_collapse
-
-        dedup_collapse = auto_collapse(df, text_col)
-    src = df
-    if dedup_collapse:
-        from gcpde_spark.llm.text import collapse_reps
-
-        src = collapse_reps(df, id_col, text_col).select(id_col, text_col)
     if clean_markup:
         from gcpde_spark.llm.text import strip_boilerplate, strip_html
 
         text_expr = strip_boilerplate(strip_html(F.col(text_col)))
     else:
         text_expr = F.col(text_col)
-    base = src.select(
+    base = df.select(
         id_col,
         normalize_text(text_expr).alias(norm_col),
         F.split(normalize_text(text_expr), " ").alias(toks_col),

@@ -9,8 +9,6 @@ expression has a DuckDB-equivalent form (see queries/llm_corpus.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -87,201 +85,19 @@ def _has_shuffle_node(df: DataFrame) -> bool:
         return True
 
 
-# ---------------------------------------------------------------------------
-# measured exact-duplication route (round 10, guide §8: decide on a
-# lightweight proxy before paying per-row work on heavy payloads)
-# ---------------------------------------------------------------------------
-
-import weakref
-
-_DUP_RATIO_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-# Collapse to distinct texts when rows / distinct(text) reaches this
-# ratio. The collapse pays one full-text hash-aggregate (map-side
-# partial, fp-clustered shuffle blocks compress replicas away) plus one
-# skinny join back, and saves (ratio - 1)× of every downstream per-text
-# cost — break-even is well under 2×; 3× keeps the route off for
-# near-dedup'd corpora where the extra exchange buys nothing. The bench
-# decade measures both regimes: sf0.1 is replica-free (ratio 1.0 →
-# direct path, identical plans to round 9) and sf10 is the 100×-replica
-# crawl-shaped corpus the collapse exists for.
-DUP_COLLAPSE_RATIO = 3.0
-
-# Below this input size the probe machinery itself — one Spark job for
-# the ratio plus a per-build plan-tree walk — costs more than the
-# collapse could ever save (the per-text work on a sub-MB input is
-# sub-second on ANY route, while the probe job floor alone is ~0.05 s
-# and the collapsed plan adds two exchanges). ``auto_collapse``
-# therefore short-circuits to the direct route straight from the scan's
-# file-index statistics: a driver-side plan-stats lookup, NO job, no
-# tree walk (VERDICT r10 #1b). The floor is deliberately SMALL — 1 MB
-# of parquet — because the statistic measures COMPRESSED bytes and
-# dictionary encoding compresses exactly the duplication the probe
-# exists to detect (measured: the 100×-replica GB-tier corpus, where
-# the collapse wins −18% to −88%, is only 6.3 MB of parquet / 2.7 MB
-# after projection-scaled estimation, while the replica-free sf0.1
-# documents table — where the probe is pure overhead — reads 0.59 MB
-# full / 0.26 MB projected; 1 MB splits the regimes with ≥1.7× margin
-# on each side). Even at a pathological 100× compression ratio, 1 MB
-# is at most ~100 MB of text — per-text work in the low seconds on one
-# executor, the scale where the probe job + per-build plan walk across
-# ~25 call sites dominate any routing benefit. At 100 TB every real
-# corpus is 8 orders of magnitude past this floor. Env-tunable.
-DUP_PROBE_MIN_BYTES = int(
-    os.environ.get("GCPDE_DUP_PROBE_MIN_BYTES", str(1 << 20))
-)
-
-
-def _scan_size_bytes(df: DataFrame) -> int:
-    """``sizeInBytes`` from the optimized logical plan's statistics —
-    for a scan-shaped frame this is the parquet file-index total,
-    already computed when the read was planned, so the call is a
-    driver-side lookup, not a Spark job. Returns -1 when unavailable
-    (e.g. Spark Connect, where ``_jdf`` does not exist); callers must
-    treat -1 as "unknown", never as "small"."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats are advisory only
-        return -1
-
-
-def text_dup_ratio(df: DataFrame, text_col: str = "text") -> float:
-    """Measured rows / distinct-texts ratio of ``df`` — the routing
-    signal for the duplicate-collapse paths (dedup signatures, shingle
-    verification, per-row text projections).
-
-    One scan job: ``count`` + HLL ``approx_count_distinct`` over
-    ``xxhash64(text)`` — both partial-aggregate map-side, so the probe
-    never shuffles text bytes and its cost is one pass at any scale
-    (rsd 5% is irrelevant against the 3× routing threshold). Cached per
-    (session, plan semantic hash): every operator probing the same
-    source table in a session shares a single job. A cached ratio is a
-    ROUTING measurement, not a result — each run still computes every
-    declared query from the parquet inputs.
-
-    Staleness: the cache key is the plan's ``semanticHash``, which does
-    NOT change when the files under the same path change — a session
-    that grows a corpus in place (incremental intake loops) keeps the
-    first probe's ratio for its lifetime. That can only mis-ROUTE
-    (outputs stay exact on either route); sessions that mutate their
-    inputs should pass ``dedup_collapse`` explicitly or start a fresh
-    session per batch, the normal structure for intake jobs.
-    """
-    spark = df.sparkSession
-    key = None
-    try:
-        key = df.select(F.col(text_col)).semanticHash()
-    except Exception:  # noqa: BLE001 — cache key only; probe still runs
-        pass
-    cache = _DUP_RATIO_CACHE.setdefault(spark, {})
-    if key is not None and key in cache:
-        return cache[key]
-    row = df.select(
-        F.count(text_col).alias("n"),
-        F.approx_count_distinct(F.xxhash64(F.col(text_col))).alias("d"),
-    ).first()
-    ratio = float(row["n"]) / float(max(row["d"], 1))
-    if key is not None:
-        cache[key] = ratio
-    return ratio
-
-
-def auto_collapse(df: DataFrame, text_col: str = "text") -> bool:
-    """The duplicate-collapse auto route: probe only SCAN-SHAPED inputs.
-
-    A shuffle-derived frame (join/aggregate/window upstream) would
-    re-execute its whole upstream pipeline just to answer the probe —
-    and such frames are typically post-dedup already. Callers that know
-    better force the route with ``dedup_collapse=True/False``.
-
-    Inputs under :data:`DUP_PROBE_MIN_BYTES` short-circuit to the
-    direct route from the scan's file statistics alone — no probe job,
-    no plan walk (see the constant's sizing note). The guard is skipped
-    when the ratio threshold has been forced ≤ 1 (the plan-audit
-    scripts set ``DUP_COLLAPSE_RATIO = 0`` to dump the collapsed plans
-    on tiny fixtures)."""
-    if DUP_COLLAPSE_RATIO > 1.0:
-        size = _scan_size_bytes(df)
-        if 0 <= size < DUP_PROBE_MIN_BYTES:
-            return False
-    if _has_shuffle_node(df):
-        return False
-    return text_dup_ratio(df, text_col) >= DUP_COLLAPSE_RATIO
-
-
-def collapse_reps(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """One row per distinct text: ``(_fp, id_col, text_col)`` where
-    ``_fp = md5(text)``, ``id_col`` is the group's MIN id (the canonical
-    representative — same choice as the Jaccard-verification collapse)
-    and ``text_col`` the shared text. NULL texts keep their NULL ``_fp``
-    group; equi-joins on ``_fp`` drop them, matching the no-shingle /
-    no-signature behavior NULL rows already have on the direct paths.
-
-    ``first(text)`` is deterministic here — every value in an md5 group
-    is the same string — and partial-aggregates map-side, so the one
-    full-text exchange this costs ships at most one candidate text per
-    (fingerprint, map task) and the fp-clustered shuffle blocks compress
-    replicas to near nothing."""
-    return df.groupBy(F.md5(F.col(text_col)).alias("_fp")).agg(
-        F.min(F.col(id_col)).alias(id_col),
-        F.first(F.col(text_col)).alias(text_col),
-    )
-
-
-# md5 output is 32 lowercase hex chars, so a NUL-prefixed sentinel can
-# never collide with a real fingerprint; it gives NULL texts their own
-# group so per-text expressions that are non-NULL on NULL input (e.g.
-# lang_pred's 'und' fallback) join back exactly.
-_NULL_FP = "\x00null"
-
-
 def _with_text_cols(
     df: DataFrame,
     text_col: str,
     cols: "dict[str, Column]",
-    dedup_collapse: bool | None = None,
     fanout: bool = True,
 ) -> DataFrame:
-    """Attach columns that are PURE PER-ROW FUNCTIONS of ``text_col``.
-
-    Direct route: one codegen projection (``spread`` fans small scans
-    out first) — the round-9 shape, zero shuffles.
-
-    Collapsed route (round 10, auto when :func:`text_dup_ratio` ≥ 3×):
-    evaluate the expressions once per DISTINCT text and join the values
-    back by md5 fingerprint. On a replica-heavy corpus (crawls before
-    exact dedup; the 100×-replica GB-tier bench data) this trades two
-    skinny exchanges for (ratio−1)× of the per-row expression work —
-    the regex-heavy stats projections are ~100× the cost of the join
-    at 100× duplication. Values are identical by purity; row order is
-    join-dependent, so callers needing order sort afterwards (every
-    corpus entry does).
-    """
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    if not dedup_collapse:
-        if fanout:
-            df = spread(df)
-        return df.select("*", *[c.alias(n) for n, c in cols.items()])
-    # collision-proof internal key: an input that already carries "_fp"
-    # (collapse_reps output, user data) must not have it silently
-    # overwritten and dropped — and the output schema must not depend on
-    # which route fired (ADVICE r10)
-    key = "_fp"
-    while key in df.columns or key in cols:
-        key = "_" + key
-    fp = F.coalesce(F.md5(F.col(text_col)), F.lit(_NULL_FP))
-    reps = df.groupBy(fp.alias(key)).agg(
-        F.first(F.col(text_col)).alias(text_col)
-    )
-    rep_vals = reps.select(key, *[c.alias(n) for n, c in cols.items()])
-    return (
-        df.withColumn(key, fp).join(rep_vals, key, "left").drop(key)
-    )
+    """Attach columns that are PURE PER-ROW FUNCTIONS of ``text_col``:
+    one codegen projection (``spread`` fans small scans out first), zero
+    shuffles. Every row pays the expressions, replicas of one text
+    included."""
+    if fanout:
+        df = spread(df)
+    return df.select("*", *[c.alias(n) for n, c in cols.items()])
 
 
 def round4(c: Column) -> Column:
@@ -385,37 +201,25 @@ def lang_pred_expr(norm: Column) -> Column:
     return F.when(best.getField("hits") > 0, best.getField("lang")).otherwise("und")
 
 
-def with_text_stats(
-    df: DataFrame, text_col: str = "text", dedup_collapse: bool | None = None
-) -> DataFrame:
+def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add token/character statistics and a composite quality score.
 
     Columns added: ``n_chars_norm``, ``n_tokens``, ``avg_token_len``,
     ``punct_ratio``, ``stopword_ratio``, ``quality_score`` — the standard
     cheap quality signals (length, punctuation density, function-word
     density) used to filter web-scale corpora before training.
-    Duplicate-heavy corpora take the measured distinct-text collapse
-    (:func:`_with_text_cols`).
     """
     norm = normalize_text(text_col)
     toks = tokens(text_col)
-    return _with_text_cols(
-        df, text_col, _stats_exprs(norm, toks), dedup_collapse=dedup_collapse
-    )
+    return _with_text_cols(df, text_col, _stats_exprs(norm, toks))
 
 
-def with_language_id(
-    df: DataFrame, text_col: str = "text", dedup_collapse: bool | None = None
-) -> DataFrame:
+def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ``lang_pred``: the language whose function-word list hits the
     most tokens (ties broken by language code order), or ``und`` when
-    nothing hits. Single projection — no shuffle, no UDF; duplicate-heavy
-    corpora take the measured distinct-text collapse."""
+    nothing hits. Single projection — no shuffle, no UDF."""
     return _with_text_cols(
-        df,
-        text_col,
-        {"lang_pred": lang_pred_expr(normalize_text(text_col))},
-        dedup_collapse=dedup_collapse,
+        df, text_col, {"lang_pred": lang_pred_expr(normalize_text(text_col))}
     )
 
 
@@ -427,14 +231,11 @@ def with_language_id(
 BPE_SPLIT_PATTERN = r" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+| +"
 
 
-def with_token_counts(
-    df: DataFrame, text_col: str = "text", dedup_collapse: bool | None = None
-) -> DataFrame:
+def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ``n_tokens_ws`` (whitespace tokens) and ``n_tokens_bpe``
     (BPE-ish regex pre-tokenizer pieces) — the two standard cheap token
     counters for corpus sizing / cost estimation. One codegen'd
-    projection, no shuffle; duplicate-heavy corpora take the measured
-    distinct-text collapse."""
+    projection, no shuffle."""
     norm = normalize_text(text_col)
     # regexp_count, not size(regexp_extract_all(...)): counting avoids
     # materializing every matched substring (~2000 string allocations per
@@ -448,7 +249,6 @@ def with_token_counts(
                 norm, F.lit(BPE_SPLIT_PATTERN)
             ).cast("bigint"),
         },
-        dedup_collapse=dedup_collapse,
     )
 
 
@@ -457,7 +257,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Top-``k`` TF-IDF terms per document: ``tf = term_count /
     doc_tokens``, ``idf = n_docs / doc_freq`` (the linear inverse
@@ -471,56 +270,6 @@ def tfidf_top_terms(
     count; the doc-count scalar joins as a broadcast literal.
     """
     from pyspark.sql import Window
-
-    # Duplicate collapse (measured auto route): tf and doc-length are
-    # per-text, and document frequency / doc count are weighted sums
-    # over distinct texts (df_term = sum of member counts over reps
-    # containing the term) — exact integer identities with the direct
-    # per-replica counts, so every score double is bit-identical. The
-    # explode (the dominant stage) runs once per distinct text and each
-    # rep's top-k rows expand to its members with one skinny join.
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    if dedup_collapse:
-        from gcpde_spark.llm.dedup import _rep_members
-
-        reps = collapse_reps(df, id_col, text_col)
-        members = _rep_members(df, id_col, text_col, reps)
-        wdf = members.groupBy("_rid").agg(F.count(F.lit(1)).alias("_w"))
-        tf = (
-            reps.select(
-                F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("term")
-            )
-            .groupBy("_id", "term")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            # no broadcast hint on wdf: one row per DISTINCT text scales
-            # with the corpus (the module's own _verify_jaccard OOM-safety
-            # rule) — let the planner/AQE size the join (ADVICE r10)
-            .join(wdf, F.col("_id") == F.col("_rid"))
-            .drop("_rid")
-        )
-        n_docs = df.select(F.countDistinct(id_col).alias("_n"))
-        with_df = tf.withColumn(
-            "_df", F.sum("_w").over(Window.partitionBy("term"))
-        )
-        with_len = with_df.withColumn(
-            "_len", F.sum("_cnt").over(Window.partitionBy("_id"))
-        )
-        scored = with_len.crossJoin(F.broadcast(n_docs)).select(
-            F.col("_id").alias("_rid"),
-            "term",
-            round4(
-                (F.col("_cnt").cast("double") / F.col("_len"))
-                * (F.col("_n").cast("double") / F.col("_df"))
-            ).alias("score"),
-        )
-        w = Window.partitionBy("_rid").orderBy(F.desc("score"), F.asc("term"))
-        rep_topk = scored.withColumn(
-            "rank", F.row_number().over(w).cast("bigint")
-        ).where(F.col("rank") <= k)
-        return rep_topk.join(members, "_rid").select(
-            F.col("_vid").alias(id_col), "term", "score", "rank"
-        )
 
     toks = tokens(text_col)
     exploded = spread(df).select(
@@ -564,7 +313,6 @@ def winnowing_fingerprints(
     text_col: str = "text",
     k: int = 3,
     w: int = 4,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Rolling-hash document fingerprints by winnowing (Schleimer et al.,
     the MOSS algorithm): hash every ``k``-token gram, slide a window of
@@ -584,30 +332,6 @@ def winnowing_fingerprints(
     oracle-checkable (queries/llm_corpus.py l13).
     """
     from pyspark.sql import Window
-
-    # The fingerprint SET is a pure function of the text, so on a
-    # duplicate-heavy corpus (measured auto route, same 3x threshold as
-    # the other collapse paths) the explode + two window passes — the
-    # whole cost — run once per DISTINCT text and the rep's rows expand
-    # to every member id with one skinny join. NULL/short texts produce
-    # no fingerprints on either route (no full window exists).
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    if dedup_collapse:
-        from gcpde_spark.llm.dedup import _rep_members
-
-        reps = collapse_reps(df, id_col, text_col)
-        rep_fps = winnowing_fingerprints(
-            reps.select(id_col, text_col), id_col, text_col, k, w,
-            dedup_collapse=False,
-        )
-        members = _rep_members(df, id_col, text_col, reps)
-        return (
-            rep_fps.join(
-                members, rep_fps[id_col] == members["_rid"]
-            )
-            .select(F.col("_vid").alias(id_col), "fingerprint")
-        )
 
     toks = tokens(text_col)
     base = spread(df).select(
@@ -791,7 +515,6 @@ def unigram_logprob(
     id_col: str = "doc_id",
     text_col: str = "text",
     reference: DataFrame | None = None,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Per-document mean token log-probability under a corpus unigram
     LM — the cheap perplexity-style quality signal (low score = tokens
@@ -819,61 +542,6 @@ def unigram_logprob(
     lnp = lambda cnt, total: (  # noqa: E731 — ln P in integer micro-nats
         F.round(F.log(cnt / total) * 1e6).cast("bigint")
     )
-    # Self-scoring duplicate collapse (measured auto route): tokenize
-    # once per DISTINCT text and weight each representative's term
-    # frequencies by its member count. The LM's corpus counts are then
-    # EXACT integer sums (sum(tf_rep * w) == the direct path's
-    # per-replica sum), so every micro-nat value is bit-identical, and
-    # the per-doc (n_tokens, mean_logprob) — functions of the doc's own
-    # text plus the corpus LM — expand to members by one skinny join.
-    # The reference path stays direct: its LM side is independent of
-    # df's duplication, and df's tf side alone rarely dominates.
-    if reference is None and dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    if reference is None and dedup_collapse:
-        from gcpde_spark.llm.dedup import _rep_members
-
-        reps = collapse_reps(df, id_col, text_col)
-        members = _rep_members(df, id_col, text_col, reps)
-        wdf = members.groupBy("_rid").agg(F.count(F.lit(1)).alias("_w"))
-        tf = (
-            reps.select(
-                F.col(id_col).alias("_vid"),
-                F.explode(tokens(text_col)).alias("_term"),
-            )
-            .groupBy("_vid", "_term")
-            .agg(F.count(F.lit(1)).alias("_tf"))
-            # no broadcast hint on wdf: per-distinct-text frame — scales
-            # with the corpus; planner/AQE sizes the join (ADVICE r10)
-            .join(wdf, F.col("_vid") == F.col("_rid"))
-            .drop("_rid")
-        )
-        wtf = F.col("_tf") * F.col("_w")
-        totals = tf.agg(F.sum(wtf).alias("_total"))
-        enriched = (
-            tf.withColumn("_cnt", F.sum(wtf).over(Window.partitionBy("_term")))
-            .crossJoin(F.broadcast(totals))
-            .withColumn("_lnp_micro", lnp(F.col("_cnt"), F.col("_total")))
-        )
-        scored = (
-            enriched.groupBy("_vid")
-            .agg(
-                F.sum("_tf").cast("bigint").alias("n_tokens"),
-                F.sum(F.col("_tf") * F.col("_lnp_micro")).alias("_sum_micro"),
-            )
-            .select(
-                F.col("_vid").alias("_rid"),
-                "n_tokens",
-                round4(
-                    F.col("_sum_micro").cast("double") / 1e6 / F.col("n_tokens")
-                ).alias("mean_logprob"),
-            )
-        )
-        per_member = members.join(scored, "_rid").select(
-            F.col("_vid").alias(id_col), "n_tokens", "mean_logprob"
-        )
-        return df.select(F.col(id_col)).join(per_member, id_col, "left")
-
     tf = (
         spread(df)
         .select(F.col(id_col).alias("_vid"), F.explode(tokens(text_col)).alias("_term"))
@@ -931,25 +599,18 @@ def unigram_logprob(
     return df.select(F.col(id_col)).join(scored, id_col, "left")
 
 
-def with_fingerprint(
-    df: DataFrame, text_col: str = "text", dedup_collapse: bool | None = None
-) -> DataFrame:
+def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add two deterministic document fingerprints:
 
     - ``fp_exact``: md5 of the normalized text — exact-dup key.
     - ``fp_bow``: md5 of the sorted distinct token set ("bag-of-words"
       fingerprint) — invariant to word order and repetition, a cheap
       near-dup pre-key between exact hashing and MinHash.
-
-    Duplicate-heavy corpora take the measured distinct-text collapse
-    (:func:`_with_text_cols`) — the bag-of-words tokenize/sort/hash is
-    ~100× the cost of the fingerprint join at 100× duplication.
     """
     norm = normalize_text(text_col)
     bow = F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(text_col))))
     return _with_text_cols(
         df, text_col, {"fp_exact": F.md5(norm), "fp_bow": F.md5(bow)},
-        dedup_collapse=dedup_collapse,
         fanout=False,
     )
 
@@ -1025,7 +686,6 @@ def chunk_documents(
     text_col: str = "text",
     chunk_tokens: int = 512,
     overlap: int = 64,
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Split each document into fixed-size token windows with overlap —
     the training-sequence prep step (512/64 ≈ a context-window shard
@@ -1041,52 +701,14 @@ def chunk_documents(
     O(total tokens · fanout) work, one narrow explode, no shuffle, no
     UDF (a transform-lambda formulation would re-evaluate the split per
     chunk; see _exploded_shingles for the same trap).
-
-    ``dedup_collapse`` (round 10): the distinct-text collapse is
-    available but OFF by default — a MEASURED NEGATIVE for chunking.
-    A document's chunk set is a pure function of its text, but the
-    fan-out join must ship every chunk_text byte through an exchange,
-    while the direct path slices token arrays in place with zero
-    shuffle; re-tokenizing a replica is cheaper than shuffling its
-    chunks. sf10 A/B (100× replicas, BENCH_SELF_SF10_COLLAPSE_AB.jsonl):
-    l25 direct 2.31 s vs collapse 5.96 s (+158%), l26 6.89 vs 7.06 s
-    (wash) — so unlike the skinny-verdict collapses (stats, fingerprints,
-    dedup survivors) this one does NOT auto-route; pass
-    ``dedup_collapse=True`` only when the downstream consumes a
-    per-distinct-text slice anyway. Row order on the forced collapse
-    path is join-dependent; the declared entries sort afterwards.
     """
     if overlap >= chunk_tokens:
         raise ValueError(
             f"overlap ({overlap}) must be < chunk_tokens ({chunk_tokens})"
         )
-    if dedup_collapse:
-        fp = F.coalesce(F.md5(F.col(text_col)), F.lit(_NULL_FP))
-        reps = df.groupBy(fp.alias("_fp")).agg(
-            F.first(F.col(text_col)).alias(text_col)
-        )
-        rep_chunks = _chunk_rows(reps, "_fp", text_col, chunk_tokens, overlap)
-        return (
-            df.select(F.col(id_col), fp.alias("_fp"))
-            .join(rep_chunks, "_fp")
-            .select(id_col, "chunk_id", "chunk_text", "n_chunk_tokens")
-        )
-    return _chunk_rows(spread(df), id_col, text_col, chunk_tokens, overlap)
-
-
-def _chunk_rows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    chunk_tokens: int,
-    overlap: int,
-) -> DataFrame:
-    """The chunking dataflow shared by both :func:`chunk_documents`
-    routes — tokenize once per input row, explode the chunk-index range,
-    slice the parent array per chunk."""
     stride = chunk_tokens - overlap
     base = (
-        df
+        spread(df)
         .withColumn("_toks", tokens(text_col))
         .withColumn("_n", F.size("_toks"))
         .withColumn(
@@ -1122,7 +744,6 @@ def top_ngrams(
     k: int = 20,
     id_col: str = "doc_id",
     text_col: str = "text",
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Corpus-wide most-frequent word ``n``-grams with document reach —
     the standard LM-data frequency analysis (boilerplate discovery,
@@ -1146,44 +767,11 @@ def top_ngrams(
     """
     from gcpde_spark.llm.dedup import _exploded_shingles
 
-    # Duplicate collapse (measured auto route): corpus-wide n-gram
-    # counts are weighted sums over DISTINCT texts — n_occurrences =
-    # sum(per-rep occurrences x member count), n_docs = sum(member
-    # count over reps containing the n-gram) — exact integer identities
-    # with the direct per-replica counts, so the top-k order and every
-    # output value are bit-identical. The shingle explosion (the
-    # dominant stage) shrinks by the duplication ratio.
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    if dedup_collapse:
-        from gcpde_spark.llm.dedup import _rep_members
-
-        reps = collapse_reps(df, id_col, text_col)
-        members = _rep_members(df, id_col, text_col, reps)
-        wdf = members.groupBy("_rid").agg(F.count(F.lit(1)).alias("_w"))
-        per_rep = (
-            _exploded_shingles(reps, id_col, text_col, n)
-            .groupBy("_vid", "_s")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        counts = (
-            # no broadcast hint on wdf: per-distinct-text frame — scales
-            # with the corpus; planner/AQE sizes the join (ADVICE r10)
-            per_rep.join(wdf, F.col("_vid") == F.col("_rid"))
-            .groupBy("_s")
-            .agg(
-                F.sum(F.col("_c") * F.col("_w"))
-                .cast("bigint")
-                .alias("n_occurrences"),
-                F.sum("_w").cast("bigint").alias("n_docs"),
-            )
-        )
-    else:
-        sh = _exploded_shingles(df, id_col, text_col, n)
-        counts = sh.groupBy("_s").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
-            F.countDistinct("_vid").cast("bigint").alias("n_docs"),
-        )
+    sh = _exploded_shingles(df, id_col, text_col, n)
+    counts = sh.groupBy("_s").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
+        F.countDistinct("_vid").cast("bigint").alias("n_docs"),
+    )
     topk = counts.orderBy(F.col("n_occurrences").desc(), F.col("_s").asc()).limit(k)
     # rank = position in the (count DESC, ngram ASC) order; struct sort is
     # ascending on the leading field, so sort on the negated count
@@ -1224,7 +812,6 @@ def bm25_topk(
     b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    dedup_collapse: bool | None = None,
 ) -> DataFrame:
     """Top-``top_k`` documents for a bag-of-words query under BM25 —
     the classical sparse-retrieval scorer (the lexical half of a RAG /
@@ -1264,42 +851,10 @@ def bm25_topk(
         return df.select(
             F.col(id_col), F.lit(0.0).alias("bm25")
         ).limit(0)
-    # Duplicate collapse (round 10, measured auto route): (dl, per-term
-    # tf) is a pure function of the text, so the corpus explode + the
-    # doc-keyed aggregation — the only corpus-sized work — run once per
-    # DISTINCT text; the per-doc (dl, tf…) row then fans back out to
-    # every member id through one skinny fingerprint join BEFORE the
-    # corpus stats, so N/total/df/idf and every score see exactly the
-    # per-document rows the direct route sees (NULL texts produce no
-    # explode row on either route — the sentinel group has no tokens).
-    if dedup_collapse is None:
-        dedup_collapse = auto_collapse(df, text_col)
-    if dedup_collapse:
-        fpc = F.coalesce(F.md5(F.col(text_col)), F.lit(_NULL_FP))
-        reps = df.groupBy(fpc.alias("_rid")).agg(
-            F.first(F.col(text_col)).alias(text_col)
-        )
-        members = df.select(F.col(id_col).alias("_mid"), fpc.alias("_rid"))
-
-        def _expand(per_doc: DataFrame) -> DataFrame:
-            return (
-                members.join(
-                    per_doc.withColumnRenamed("_id", "_rid"), "_rid"
-                )
-                .drop("_rid")
-                .withColumnRenamed("_mid", "_id")
-            )
-
-        ex = reps.select(
-            F.col("_rid").alias("_id"),
-            F.explode(tokens(text_col)).alias("_term"),
-        )
-    else:
-        _expand = lambda per_doc: per_doc  # noqa: E731
-        ex = spread(df).select(
-            F.col(id_col).alias("_id"),
-            F.explode(tokens(text_col)).alias("_term"),
-        )
+    ex = spread(df).select(
+        F.col(id_col).alias("_id"),
+        F.explode(tokens(text_col)).alias("_term"),
+    )
     if len(terms) <= _BM25_WIDE_TERM_LIMIT:
         # small queries: |terms| conditional-sum columns in ONE id-keyed
         # aggregation, then an all-literal struct unpivot — dl and every
@@ -1313,7 +868,6 @@ def bm25_topk(
                 for i, t in enumerate(terms)
             ],
         )
-        dltf = _expand(dltf)
         stats = dltf.agg(
             F.count(F.lit(1)).cast("bigint").alias("_n_docs"),
             F.sum("_dl").alias("_total"),
@@ -1355,7 +909,6 @@ def bm25_topk(
                 F.when(F.col("_term").isin(terms), F.col("_term"))
             ).alias("_qhits"),
         )
-        agg = _expand(agg)
         stats = agg.agg(
             F.count(F.lit(1)).cast("bigint").alias("_n_docs"),
             F.sum("_dl").alias("_total"),

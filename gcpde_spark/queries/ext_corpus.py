@@ -359,7 +359,7 @@ def c55(spark: SparkSession, sf: str) -> DataFrame:
     # child to pick partition bounds, so with the scalars below the
     # sort the tokenize+HOF projection executes twice (sample pass +
     # real pass), costing more than the array payload saves. Keep the
-    # sort below the scalars; scripts/sf10_profile.py re-runs the A/B.
+    # sort below the scalars.
     toks = F.col("_toks")
     return (
         docs.select("doc_id", tokens("text").alias("_toks"))
@@ -579,7 +579,7 @@ def c58(spark: SparkSession, sf: str) -> DataFrame:
     # rangeBetween takes long offsets); selectExpr keeps the identical
     # frame spec on both engines.
     # NEGATIVE RESULT / decomposition (VERDICT r9 #2b, sf10 GB tier,
-    # median-of-3, scripts/sf10_profile.py): shipped 7.9 s; dropping
+    # median-of-3): shipped 7.9 s; dropping
     # the final ORDER BY saves only ~0.6 s, and the bare
     # exchange+sort SHAPE (repartition(user_id) + sortWithinPartitions,
     # no window at all) already reads 5-9 s. The entry's cost is the
@@ -1195,9 +1195,8 @@ def l36(spark: SparkSession, sf: str) -> DataFrame:
     from gcpde_spark.llm.text import _with_text_cols, tokens
 
     docs = load_table(spark, sf, "documents").where(F.col("text").isNotNull())
-    # per-text token/char counts through the measured duplicate-collapse
-    # route (fanout=False keeps the replica-free plan identical to the
-    # direct projection this entry always had)
+    # per-text token/char counts in one projection (fanout=False: no
+    # repartition ahead of the keyed aggregation)
     t = _with_text_cols(
         docs,
         "text",
@@ -1246,27 +1245,12 @@ def l36(spark: SparkSession, sf: str) -> DataFrame:
 )
 def l37(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").where(F.col("text").isNotNull())
-    from gcpde_spark.llm.text import auto_collapse, tokens
+    from gcpde_spark.llm.text import tokens
 
     prefix = F.array_join(F.slice(tokens("text"), 1, 5), " ")
-    # Round 10 duplicate collapse (measured auto route): raw-md5 text
-    # groups refine the prefix-fingerprint groups, so a raw pre-aggregate
-    # carrying the copy count feeds the prefix aggregate exactly (sz =
-    # sum of raw-group counts) and the tokenize+md5 prefix expression
-    # runs once per DISTINCT text. Replica-free corpora keep the direct
-    # single aggregation.
-    if auto_collapse(docs, "text"):
-        pre = docs.groupBy(F.md5(F.col("text")).alias("_rfp")).agg(
-            F.first(F.col("text")).alias("text"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        g = pre.groupBy(F.md5(prefix).alias("fp")).agg(
-            F.sum("_n").cast("bigint").alias("sz")
-        )
-    else:
-        g = docs.groupBy(F.md5(prefix).alias("fp")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("sz")
-        )
+    g = docs.groupBy(F.md5(prefix).alias("fp")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("sz")
+    )
     return (
         g.groupBy(F.col("sz").alias("cluster_size"))
         .agg(
@@ -1522,13 +1506,6 @@ def l38(spark: SparkSession, sf: str) -> DataFrame:
     from gcpde_spark.llm.text import _with_text_cols, normalize_text
 
     docs = load_table(spark, sf, "documents")
-    # Round 10 duplicate collapse (measured auto route, _with_text_cols):
-    # both snapshot fingerprints are pure functions of the text, so on a
-    # replica-heavy corpus the normalize regex runs once per DISTINCT
-    # text (both variants in one rep projection) and the two hashes join
-    # back by raw fingerprint; the %10 side filters and the doc_id-keyed
-    # full-outer compare are unchanged. Replica-free corpora (the
-    # sf0.01/sf0.1 oracle and bench data) keep the direct projection.
     fps = _with_text_cols(
         docs,
         "text",
@@ -1594,33 +1571,14 @@ def l38(spark: SparkSession, sf: str) -> DataFrame:
     "the rate is one double division of exact values.",
 )
 def l39(spark: SparkSession, sf: str) -> DataFrame:
-    from gcpde_spark.llm.text import _NULL_FP, auto_collapse, tokens
+    from gcpde_spark.llm.text import tokens
 
     docs = load_table(spark, sf, "documents")
-    # Round 10 duplicate collapse (measured auto route): each side's
-    # distinct (lang, term) set only needs every DISTINCT text exploded
-    # once — replicas contribute no new terms. Collapsed route: rep
-    # terms per text fingerprint (distinct), the side's distinct
-    # (fingerprint, lang) keys, one skinny equi-join, then the same
-    # (lang, term) distinct. NULL texts explode to nothing on both
-    # routes. Replica-free corpora keep the direct explode.
-    collapse = auto_collapse(docs, "text")
 
     def ex(pred):
-        side = docs.where(pred)
-        if not collapse:
-            return side.select(
-                "lang", F.explode(tokens("text")).alias("term")
-            ).distinct()
-        fp = F.coalesce(F.md5(F.col("text")), F.lit(_NULL_FP))
-        reps = side.groupBy(fp.alias("_fp")).agg(
-            F.first(F.col("text")).alias("text")
-        )
-        rep_terms = reps.select(
-            "_fp", F.explode(tokens("text")).alias("term")
+        return docs.where(pred).select(
+            "lang", F.explode(tokens("text")).alias("term")
         ).distinct()
-        keys = side.select(fp.alias("_fp"), "lang").distinct()
-        return keys.join(rep_terms, "_fp").select("lang", "term").distinct()
 
     ref = ex(F.col("doc_id") % 2 == 0).withColumnRenamed("term", "rterm")
     cur = ex(F.col("doc_id") % 2 == 1)

@@ -498,20 +498,13 @@ def l15(spark: SparkSession, sf: str) -> DataFrame:
 )
 def l16(spark: SparkSession, sf: str) -> DataFrame:
     from gcpde_spark.llm.dedup import dedup_clusters
-    from gcpde_spark.llm.text import auto_collapse
 
     docs = load_table(spark, sf, "documents")
     # reuse x03's verified pairs: the ≥ 0.7 subset of the shared ≥ 0.5
     # pair list is exactly minhash_near_dup_pairs(threshold=0.7) for the
-    # same signature family (candidates don't depend on the threshold).
-    # The pairs come from the internal generator, which always emits
-    # same-text pairs — the precondition of the quotient-CC collapse —
-    # so this caller opts in to the measured auto route explicitly
-    # (caller-supplied pair lists no longer auto-route; ADVICE r10).
+    # same signature family (candidates don't depend on the threshold)
     pairs = _shared_minhash_pairs(spark, sf).where(F.col("jaccard") >= 0.7)
-    return dedup_clusters(
-        docs, "doc_id", pairs=pairs, dedup_collapse=auto_collapse(docs)
-    ).orderBy("doc_id")
+    return dedup_clusters(docs, "doc_id", pairs=pairs).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -661,10 +654,8 @@ def l21(spark: SparkSession, sf: str) -> DataFrame:
 
     # ~15 sequential regex passes per row: CPU-bound enough that a
     # 1-2-partition parquet scan pins it to 1-2 cores (measured 13 s at
-    # sf1 without the fan-out, ~1 s with it). The clean text is a pure
-    # function of `text`, so _with_text_cols keeps that spread fan-out
-    # on replica-free corpora and evaluates the regex chain once per
-    # DISTINCT text on duplicate-heavy ones (measured auto route).
+    # sf1 without the fan-out, ~1 s with it); _with_text_cols applies
+    # that spread fan-out ahead of the regex chain.
     docs = load_table(spark, sf, "documents")
     html = F.concat(
         F.lit(

@@ -93,8 +93,10 @@ def merge_dataframes(
     ``on_duplicate_keys="error"`` mirrors BigQuery MERGE, which fails when
     one target row matches multiple source rows: a per-key count is planned
     over the source and ``raise_error`` fires at execution time if any key
-    repeats — distributed, no extra driver-side job. Pass ``"keep"`` to
-    skip the guard (both duplicate source rows survive).
+    repeats — distributed, no extra driver-side job. A source row with a
+    NULL key matches no target row and so is never a duplicate: every
+    one of them inserts. Pass ``"keep"`` to skip the guard (both
+    duplicate source rows survive).
 
     The guard is a *filter* (always-true unless it raises), not an
     expression grafted onto an output column: a column-borne guard is
@@ -111,11 +113,14 @@ def merge_dataframes(
     source = source.select(*[c for c in target.columns])
     if on_duplicate_keys == "error":
         cnt = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        dup = F.col("_gcpde_dup_cnt") > 1
+        for k in keys:
+            dup = dup & F.col(k).isNotNull()
         source = (
             source.withColumn("_gcpde_dup_cnt", cnt)
             .where(
                 F.when(
-                    F.col("_gcpde_dup_cnt") > 1,
+                    dup,
                     F.raise_error(
                         F.concat(
                             F.lit(

@@ -1193,10 +1193,10 @@ class TxnTable:
                 src.select(*keys).distinct(), on=keys, how="left_semi"
             ).select("_dv_file", "_dv_pos"),
             rows=src,
-            # the vector path writes the source alone, under the SAME
-            # duplicate-key guard merge_dataframes installs on a rewrite
-            # (merging into an empty target), so the two paths cannot
-            # drift on MERGE's error semantics
+            # the source written alone (the vector path, or a delta no
+            # file's key range overlaps) gets the SAME duplicate-key guard
+            # merge_dataframes installs on a rewrite (merging into an
+            # empty target), so no path drifts on MERGE's error semantics
             guard=lambda r: merge_dataframes(
                 self.spark.createDataFrame([], schema),
                 r,
@@ -1473,14 +1473,16 @@ class TxnTable:
           as ``rewrite(old)`` — the verb's one-pass plan for "old rows
           minus superseded plus added" — and their entries are replaced;
           every other entry carries over verbatim. With nothing touched
-          the write is ``rows`` alone.
+          the write is ``rows`` alone, through ``guard``.
         - ``vectors=True`` (deletion vectors): the touched files stay
           byte-identical. The superseded rows' ``(file, row position)``
           pairs go to one sidecar that every read anti-joins out
-          (:meth:`_read_entries`), and only ``rows`` write as data —
-          through ``guard``, the in-plan assertions a verb's rewrite
-          plan carries itself (MERGE's duplicate-key check). O(matched
-          rows) instead of O(touched files).
+          (:meth:`_read_entries`), and only ``rows`` write as data,
+          through ``guard``. O(matched rows) instead of O(touched files).
+
+        ``guard`` holds the in-plan assertions a verb's rewrite plan
+        carries itself (MERGE's duplicate-key check); every write of
+        ``rows`` alone goes through it, so no path skips them.
 
         ``rows`` (a frame, or a function of the superseded rows —
         UPDATE's SET) are validated against the CHECK constraints in
@@ -1511,6 +1513,8 @@ class TxnTable:
                 written = rewrite(old)
                 if callable(rows):
                     rows = rows(match(old))
+            elif guard is not None and rows is not None:
+                written = guard(rows)
             if rows is None:
                 new_files = _write_data_files(
                     self.spark, self.path, written, mapping=mp

@@ -40,14 +40,6 @@ os.environ.setdefault("GCPDE_SPARK_WAREHOUSE", "/tmp/gcpde_spark_plans_wh")
 from gcpde_spark.queries import CORPUS  # noqa: E402
 from gcpde_spark.session import build_session  # noqa: E402
 
-# GCPDE_DUP_COLLAPSE=off forces the round-9 direct route (threshold ->
-# inf) so the duplicate-collapse A/B's "before" plan can be dumped from
-# the same tree; unset/any other value keeps the shipped auto route.
-if os.environ.get("GCPDE_DUP_COLLAPSE") == "off":
-    from gcpde_spark.llm import text as _text_mod  # noqa: E402
-
-    _text_mod.DUP_COLLAPSE_RATIO = float("inf")
-
 
 def main() -> None:
     OUTDIR.mkdir(parents=True, exist_ok=True)

@@ -17,7 +17,6 @@ Usage: python scripts/plan_report.py  (~2 min at sf0.001)
 from __future__ import annotations
 
 import json
-import os
 import sys
 from pathlib import Path
 
@@ -28,19 +27,6 @@ from gcpde_spark.queries import CORPUS
 from gcpde_spark.session import build_session
 
 SF = "/root/testdata/sf0.001"
-
-# GCPDE_DUP_COLLAPSE=force audits the round-10 duplicate-collapse
-# routes (threshold -> 0 so every text operator takes the collapsed
-# plan even on the replica-free audit corpus) and writes
-# PLANS_SELF_COLLAPSE.json — committed proof that the routed plans
-# pass the same 100 TB gate as the direct ones. Default audits the
-# shipped auto routes (direct at sf0.001) into PLANS_SELF.json.
-FORCE_COLLAPSE = os.environ.get("GCPDE_DUP_COLLAPSE") == "force"
-if FORCE_COLLAPSE:
-    from gcpde_spark.llm import text as _text_mod
-
-    _text_mod.DUP_COLLAPSE_RATIO = 0.0
-OUT_NAME = "PLANS_SELF_COLLAPSE.json" if FORCE_COLLAPSE else "PLANS_SELF.json"
 
 # Entries that drain a Structured Streaming query during build — the
 # memory-sink scan they return has no batch plan to audit; their batch
@@ -133,9 +119,7 @@ def main() -> None:
         "violations": violations,
     }
     payload = {"summary": summary, "plans": out, "sf_dir": SF}
-    if FORCE_COLLAPSE:
-        payload["dup_collapse"] = "forced (threshold 0)"
-    Path(__file__).resolve().parent.parent.joinpath(OUT_NAME).write_text(
+    Path(__file__).resolve().parent.parent.joinpath("PLANS_SELF.json").write_text(
         json.dumps(payload, indent=1) + "\n"
     )
     print(json.dumps(summary, indent=1))

@@ -3396,18 +3396,19 @@ def test_unpersist_after_latch_reaches_cached_build_plan(spark):
     spark.catalog.clearCache()
 
 
-# -- round-10 duplicate-collapse routes ---------------------------------------
-# Every collapse route must produce EXACTLY the direct route's rows: the
-# collapsed expressions are pure functions of the text, so values agree
-# bit-for-bit; these tests pin the row-set equality on a corpus with
-# planted exact-duplicate groups (the regime the route exists for),
-# including a NULL-text row (NULL-fingerprint group handling).
+# -- corpora with exact-duplicate texts ---------------------------------------
+# Every text operator has one route, which pays its per-text work once per
+# ROW. On a corpus with planted exact-duplicate groups these tests pin
+# what that route owes replicas: each replica gets the per-text values of
+# its base id, every same-text id pair comes out of the pair generators
+# at Jaccard 1.0 / Hamming 0, and the NULL-text row is kept or dropped as
+# the operator's NULL contract says.
 
 
 @pytest.fixture(scope="module")
 def dup_docs(spark, docs):
-    """40 base docs replicated 4x under shifted ids (+ one NULL-text
-    row): dup ratio ~4, above the 3x auto-collapse threshold."""
+    """40 base docs replicated 4x under ids shifted by 100000·k (+ one
+    NULL-text row with id 999999)."""
     base = docs.limit(40).select("doc_id", "text")
     out = base
     for i in range(3):
@@ -3420,11 +3421,64 @@ def dup_docs(spark, docs):
     return out.unionByName(null_row).cache()
 
 
+_NULL_ID = 999999
+
+
+def _base_id(i):
+    """The base doc a ``dup_docs`` replica copies (itself for a base id)."""
+    return i if i == _NULL_ID else i % 100000
+
+
 def _rows(df):
     cols = sorted(df.columns)
     rows = [tuple(r[c] for c in cols) for r in df.select(*cols).collect()]
     # None-safe total order: sort by per-value (is_null, repr) keys
     return sorted(rows, key=lambda t: tuple((v is None, repr(v)) for v in t))
+
+
+def _by_id(df, id_col="doc_id"):
+    """``{id: sorted list of the other columns' value tuples}``."""
+    cols = sorted(c for c in df.columns if c != id_col)
+    out = {}
+    for r in df.collect():
+        out.setdefault(r[id_col], []).append(tuple(r[c] for c in cols))
+    return {k: sorted(v, key=repr) for k, v in out.items()}
+
+
+def _assert_replicas_match_base(per_id):
+    """Every replica's values equal its base id's values."""
+    for i, vals in per_id.items():
+        assert vals == per_id[_base_id(i)], (i, vals, per_id[_base_id(i)])
+
+
+def _text_of(dup_docs):
+    return {r["doc_id"]: r["text"] for r in dup_docs.collect()}
+
+
+def _assert_replica_closed_pairs(rows, text_of, value_col, same_text_value):
+    """Pairs over ``dup_docs`` behave per TEXT pair: every same-text id
+    pair is present with ``same_text_value``; the id pairs of one text
+    pair are all present with one value; the NULL-text row pairs with
+    nothing."""
+    groups = {}
+    for i, t in text_of.items():
+        if t is not None:
+            groups.setdefault(t, []).append(i)
+    buckets = {}
+    for r in rows:
+        ta, tb = text_of[r["id_a"]], text_of[r["id_b"]]
+        assert ta is not None and tb is not None, r
+        assert r["id_a"] < r["id_b"], r
+        if ta == tb:
+            assert r[value_col] == same_text_value, r
+        key = tuple(sorted((ta, tb)))
+        buckets.setdefault(key, []).append(r[value_col])
+    for (ta, tb), vals in buckets.items():
+        m, n = len(groups[ta]), len(groups[tb])
+        assert len(vals) == (m * (m - 1) // 2 if ta == tb else m * n)
+        assert len(set(vals)) == 1, vals
+    for t, ids in groups.items():
+        assert (t, t) in buckets, ids
 
 
 @pytest.mark.parametrize("fn_name", [
@@ -3434,65 +3488,56 @@ def _rows(df):
 def test_text_projection_collapse_parity(dup_docs, fn_name):
     import gcpde_spark.llm.text as text_mod
 
-    fn = getattr(text_mod, fn_name)
-    direct = _rows(fn(dup_docs, dedup_collapse=False))
-    collapsed = _rows(fn(dup_docs, dedup_collapse=True))
-    assert collapsed == direct
+    out = getattr(text_mod, fn_name)(dup_docs)
+    per_id = _by_id(out)
+    # a projection keeps every row, the NULL-text row included
+    assert len(per_id) == 161 and _NULL_ID in per_id
+    assert all(len(v) == 1 for v in per_id.values())
+    _assert_replicas_match_base(per_id)
 
 
 def test_minhash_collapse_parity(dup_docs):
-    direct = _rows(
-        minhash_near_dup_pairs(
-            dup_docs, "doc_id", num_hashes=32, bands=8, threshold=0.5,
-            dedup_collapse=False,
-        )
-    )
-    collapsed = _rows(
-        minhash_near_dup_pairs(
-            dup_docs, "doc_id", num_hashes=32, bands=8, threshold=0.5,
-            dedup_collapse=True,
-        )
-    )
-    assert collapsed == direct
-    # the route must actually find the planted same-text pairs
-    assert len(collapsed) >= 40 * 6  # 4 replicas -> C(4,2)=6 pairs per text
+    out = minhash_near_dup_pairs(
+        dup_docs, "doc_id", num_hashes=32, bands=8, threshold=0.5
+    ).collect()
+    _assert_replica_closed_pairs(out, _text_of(dup_docs), "jaccard", 1.0)
+    assert len(out) >= 40 * 6  # 4 replicas -> C(4,2)=6 pairs per text
 
 
 def test_simhash_collapse_parity(dup_docs):
-    direct = _rows(
-        simhash_near_dup_pairs(dup_docs, "doc_id", dedup_collapse=False)
-    )
-    collapsed = _rows(
-        simhash_near_dup_pairs(dup_docs, "doc_id", dedup_collapse=True)
-    )
-    assert collapsed == direct
-    assert len(collapsed) >= 40 * 6
+    out = simhash_near_dup_pairs(dup_docs, "doc_id").collect()
+    _assert_replica_closed_pairs(out, _text_of(dup_docs), "hamming", 0)
+    assert len(out) >= 40 * 6
 
 
 def test_verify_jaccard_collapse_parity(spark, dup_docs):
     from gcpde_spark.llm.dedup import ngram_jaccard_pairs
 
-    ids = dup_docs.where(F.col("text").isNotNull()).select("doc_id")
-    # adjacent-id candidate pairs across replica boundaries: most pairs
-    # reference NON-representative member ids, exercising the rep remap
+    # every id pair among the replicas of 5 base texts: same-text pairs
+    # and cross-text pairs whose ids are mostly NOT the base ids
+    first = sorted(
+        r["doc_id"]
+        for r in dup_docs.where(
+            F.col("text").isNotNull() & (F.col("doc_id") < 100000)
+        ).collect()
+    )[:5]
+    ids = dup_docs.where(
+        F.col("text").isNotNull() & (F.col("doc_id") % 100000).isin(first)
+    ).select("doc_id")
     pairs = (
         ids.alias("a")
-        .join(
-            ids.alias("b"),
-            F.col("a.doc_id") + 100000 == F.col("b.doc_id"),
-        )
+        .join(ids.alias("b"), F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
     )
-    direct = _rows(
-        ngram_jaccard_pairs(dup_docs, pairs, "doc_id", dedup_collapse=False)
+    out = ngram_jaccard_pairs(dup_docs, pairs, "doc_id").collect()
+    text_of = _text_of(dup_docs)
+    assert len(out) == pairs.count() == 190
+    _assert_replica_closed_pairs(
+        out, {i: t for i, t in text_of.items() if _base_id(i) in first},
+        "jaccard", 1.0,
     )
-    collapsed = _rows(
-        ngram_jaccard_pairs(dup_docs, pairs, "doc_id", dedup_collapse=True)
-    )
-    assert collapsed == direct
-    assert len(collapsed) > 0
 
 
 def test_decontaminate_collapse_parity(spark, dup_docs):
@@ -3501,210 +3546,150 @@ def test_decontaminate_collapse_parity(spark, dup_docs):
     bench = dup_docs.where(
         F.col("text").isNotNull() & (F.col("doc_id") % 7 == 0)
     ).select(F.col("doc_id").alias("bench_id"), "text")
-    direct = _rows(
-        decontaminate(dup_docs, bench, n=3, min_shared=2, dedup_collapse=False)
-    )
-    collapsed = _rows(
-        decontaminate(dup_docs, bench, n=3, min_shared=2, dedup_collapse=True)
-    )
-    assert collapsed == direct
-
-
-def test_auto_collapse_routing(spark, docs, dup_docs):
-    import gcpde_spark.llm.text as text_mod
-    from gcpde_spark.llm.text import _scan_size_bytes, auto_collapse
-
-    # round 11: sub-DUP_PROBE_MIN_BYTES inputs short-circuit to the
-    # direct route from plan statistics alone — no probe job, no plan
-    # walk — even when the corpus is replica-heavy
-    assert 0 <= _scan_size_bytes(dup_docs) < text_mod.DUP_PROBE_MIN_BYTES
-    assert auto_collapse(dup_docs) is False
-    min0 = text_mod.DUP_PROBE_MIN_BYTES
-    text_mod.DUP_PROBE_MIN_BYTES = 0
-    try:
-        # past the size floor: replica-heavy scan-shaped input ->
-        # collapse (cache() is not a shuffle); replica-free -> direct
-        assert auto_collapse(dup_docs) is True
-        assert auto_collapse(docs.select("doc_id", "text")) is False
-        # shuffle-derived frames never probe (the probe would
-        # re-execute the upstream pipeline)
-        shuffled = dup_docs.groupBy("doc_id", "text").agg(
-            F.count(F.lit(1)).alias("_c")
-        )
-        assert auto_collapse(shuffled) is False
-    finally:
-        text_mod.DUP_PROBE_MIN_BYTES = min0
-    # frames with no usable size estimate must fall through to the
-    # probe (unknown is not small): a pickled-rows local relation
-    # reports the defaultSizeInBytes sentinel
-    local = spark.createDataFrame([(1, "a")], "doc_id: long, text: string")
-    assert _scan_size_bytes(local) >= text_mod.DUP_PROBE_MIN_BYTES
-
-
-def test_collapse_reps_min_id_and_null_group(spark):
-    from gcpde_spark.llm.text import collapse_reps
-
-    df = spark.createDataFrame(
-        [(5, "aa"), (2, "aa"), (9, "bb"), (1, None)],
-        "doc_id: long, text: string",
-    )
-    reps = {
-        r["text"]: r["doc_id"]
-        for r in collapse_reps(df, "doc_id", "text").collect()
+    out = decontaminate(dup_docs, bench, n=3, min_shared=2)
+    per_id = _by_id(out)
+    assert len(per_id) == 161
+    _assert_replicas_match_base(per_id)
+    # the NULL-text row shares nothing and stays clean
+    null = out.where(F.col("doc_id") == _NULL_ID).collect()[0]
+    assert null["n_shared_ngrams"] == 0 and null["contaminated"] is False
+    # a benchmark item's own texts (all its replicas) are contaminated
+    hit = {_base_id(r["bench_id"]) for r in bench.collect()}
+    flagged = {
+        r["doc_id"] for r in out.where("contaminated").collect()
     }
-    assert reps["aa"] == 2 and reps["bb"] == 9
-    # NULL text keeps its own (NULL-fp) group and is dropped by the
-    # fingerprint equi-joins downstream
-    assert reps[None] == 1
+    assert {i for i in per_id if _base_id(i) in hit} <= flagged
 
 
 def test_winnowing_collapse_parity(dup_docs):
     from gcpde_spark.llm.text import winnowing_fingerprints
 
-    direct = _rows(
-        winnowing_fingerprints(dup_docs, "doc_id", dedup_collapse=False)
-    )
-    collapsed = _rows(
-        winnowing_fingerprints(dup_docs, "doc_id", dedup_collapse=True)
-    )
-    assert collapsed == direct
-    assert len(collapsed) > 0
+    per_id = _by_id(winnowing_fingerprints(dup_docs, "doc_id"))
+    assert len(per_id) > 0 and _NULL_ID not in per_id
+    _assert_replicas_match_base(per_id)
 
 
 def test_unigram_logprob_collapse_parity(dup_docs):
     from gcpde_spark.llm.text import unigram_logprob
 
-    direct = _rows(unigram_logprob(dup_docs, dedup_collapse=False))
-    collapsed = _rows(unigram_logprob(dup_docs, dedup_collapse=True))
-    # exact equality incl. the micro-nat-derived doubles: the collapsed
-    # LM counts are the same integers (sum(tf_rep * members) == the
-    # per-replica sums), so every ln P quantization is bit-identical
-    assert collapsed == direct
+    per_id = _by_id(unigram_logprob(dup_docs))
+    # one row per input id: the NULL-text row keeps NULL scores
+    assert len(per_id) == 161
+    assert per_id[_NULL_ID] == [(None, None)]
+    _assert_replicas_match_base(per_id)
 
 
 def test_top_ngrams_collapse_parity(dup_docs):
     from gcpde_spark.llm.text import top_ngrams
 
-    direct = _rows(top_ngrams(dup_docs, n=2, k=15, dedup_collapse=False))
-    collapsed = _rows(top_ngrams(dup_docs, n=2, k=15, dedup_collapse=True))
-    assert collapsed == direct
-    assert len(collapsed) == 15
+    base = dup_docs.where(F.col("doc_id") < 100000)
+    # four copies of the base corpus: same top-k order, every count x4
+    out = {r["rank"]: tuple(r) for r in top_ngrams(dup_docs, n=2, k=15).collect()}
+    want = {
+        r["rank"]: (r["ngram"], 4 * r["n_occurrences"], 4 * r["n_docs"], r["rank"])
+        for r in top_ngrams(base, n=2, k=15).collect()
+    }
+    assert out == want
+    assert sorted(out) == list(range(1, 16))
 
 
 def test_corpus_report_collapse_parity(spark, dup_docs):
     from gcpde_spark.llm.curation import corpus_report
-    import gcpde_spark.llm.text as text_mod
 
-    # corpus_report's strata come from extra columns; give replicas a
-    # DIFFERENT stratum than their originals so the collapse must keep
-    # per-row strata intact while collapsing only the text work
+    # replicas sit in a DIFFERENT stratum than their originals: the
+    # report must keep per-row strata apart
     df = dup_docs.withColumn(
         "source", F.when(F.col("doc_id") < 100000, "a").otherwise("b")
     ).withColumn("lang", F.lit("en"))
-    ratio0 = text_mod.DUP_COLLAPSE_RATIO
-    try:
-        text_mod.DUP_COLLAPSE_RATIO = float("inf")
-        direct = _rows(corpus_report(df))
-        text_mod.DUP_COLLAPSE_RATIO = 0.0
-        collapsed = _rows(corpus_report(df))
-    finally:
-        text_mod.DUP_COLLAPSE_RATIO = ratio0
-    assert collapsed == direct
-    assert len(collapsed) == 2  # both strata present
+    rows = {r["source"]: r for r in corpus_report(df).collect()}
+    assert set(rows) == {"a", "b"}
+    a, b = rows["a"], rows["b"]
+    assert (a["n_docs"], b["n_docs"]) == (40, 121)  # b holds the NULL row
+    assert b["total_tokens"] == 3 * a["total_tokens"]
+    assert b["n_distinct_texts"] == a["n_distinct_texts"]
+    for s in ("a", "b"):
+        alone = corpus_report(df.where(F.col("source") == s)).collect()
+        assert [tuple(r) for r in alone] == [tuple(rows[s])]
+    # without the NULL row, stratum b is three copies of stratum a
+    texts = {
+        r["source"]: r
+        for r in corpus_report(df.where(F.col("text").isNotNull())).collect()
+    }
+    assert abs(texts["b"]["mean_quality"] - texts["a"]["mean_quality"]) <= 1e-4
 
 
 def test_tfidf_collapse_parity(dup_docs):
     from gcpde_spark.llm.text import tfidf_top_terms
 
-    direct = _rows(tfidf_top_terms(dup_docs, k=3, dedup_collapse=False))
-    collapsed = _rows(tfidf_top_terms(dup_docs, k=3, dedup_collapse=True))
-    # exact equality incl. score doubles: the collapsed document
-    # frequency / doc count are the same integers as the per-replica
-    # counts, so every tf*idf product is bit-identical
-    assert collapsed == direct
-    assert len(collapsed) > 0
+    per_id = _by_id(tfidf_top_terms(dup_docs, k=3))
+    # the NULL-text row has no tokens, so no terms
+    assert len(per_id) > 0 and _NULL_ID not in per_id
+    _assert_replicas_match_base(per_id)
 
 
 def test_pipeline_collapse_parity(dup_docs):
     from gcpde_spark.llm.pipeline import curate_documents
 
-    direct = _rows(
-        curate_documents(dup_docs, min_tokens=5, dedup_collapse=False)
-    )
-    collapsed = _rows(
-        curate_documents(dup_docs, min_tokens=5, dedup_collapse=True)
-    )
-    # raw-text groups refine the normalized-text dedup groups and the
-    # rep is the min id, so the surviving rows are identical
-    assert collapsed == direct
-    assert len(collapsed) > 0
+    # the dedup window keeps the smallest id per normalized text, so on
+    # four copies of the base corpus the survivors are the base corpus's
+    base = dup_docs.where(F.col("doc_id") < 100000)
+    out = _rows(curate_documents(dup_docs, min_tokens=5))
+    assert out == _rows(curate_documents(base, min_tokens=5))
+    assert len(out) > 0
 
 
 def test_exact_dedup_groups_collapse_parity(dup_docs):
     from gcpde_spark.llm.dedup import exact_dedup_groups
 
-    direct = _rows(
-        exact_dedup_groups(dup_docs, "doc_id", dedup_collapse=False)
-    )
-    collapsed = _rows(
-        exact_dedup_groups(dup_docs, "doc_id", dedup_collapse=True)
-    )
-    # raw-md5 groups refine the normalized-md5 groups: min-over-mins is
-    # the group min and sum-of-counts the group count, so (fp, keep_id,
-    # n_copies) agree exactly — incl. the NULL-text group
-    assert collapsed == direct
-    assert any(n == 4 for _, _, n in [
-        (r[0], r[1], r[2]) for r in collapsed
-    ] if isinstance(n, int))
+    base = dup_docs.where(F.col("doc_id") < 100000)
+    want = {
+        r["fp"]: (r["keep_id"], 4 * r["n_copies"])
+        for r in exact_dedup_groups(base, "doc_id").collect()
+    }
+    # the NULL text is its own group
+    assert None not in want
+    want[None] = (_NULL_ID, 1)
+    out = {
+        r["fp"]: (r["keep_id"], r["n_copies"])
+        for r in exact_dedup_groups(dup_docs, "doc_id").collect()
+    }
+    assert out == want
+    assert any(n == 4 for _, n in out.values())
 
 
 @pytest.mark.parametrize("keep", ["min_id", "longest"])
 def test_exact_dedup_keep_collapse_parity(dup_docs, keep):
     from gcpde_spark.llm.curation import exact_dedup_keep
 
-    direct = _rows(
-        exact_dedup_keep(dup_docs, keep=keep, dedup_collapse=False)
+    base = dup_docs.where(F.col("doc_id") < 100000)
+    out = _rows(exact_dedup_keep(dup_docs, keep=keep))
+    # replicas lose to their base id under (len desc, id asc) and
+    # (id asc); the NULL-text row is its own group and survives
+    want = _rows(
+        exact_dedup_keep(base, keep=keep).unionByName(
+            dup_docs.where(F.col("doc_id") == _NULL_ID)
+        )
     )
-    collapsed = _rows(
-        exact_dedup_keep(dup_docs, keep=keep, dedup_collapse=True)
-    )
-    # within a raw-text group every length is equal, so the best row
-    # under (len desc, id asc) or (id asc) is the min-id representative;
-    # ranking reps only picks the same survivors
-    assert collapsed == direct
-    assert len(collapsed) == 41  # 40 distinct texts + the NULL row
+    assert out == want
+    assert len(out) == 41  # 40 distinct texts + the NULL row
 
 
 def test_chunk_documents_collapse_parity(dup_docs):
     from gcpde_spark.llm.text import chunk_documents
 
-    direct = _rows(
-        chunk_documents(
-            dup_docs, chunk_tokens=8, overlap=2, dedup_collapse=False
-        )
-    )
-    collapsed = _rows(
-        chunk_documents(
-            dup_docs, chunk_tokens=8, overlap=2, dedup_collapse=True
-        )
-    )
-    # chunk sets are pure functions of the text; the fingerprint
-    # fan-out join must reproduce every member's rows. NULL-text docs
-    # produce NO chunks on the direct path (explode of a NULL index
-    # range drops the row) and the sentinel group reproduces exactly
-    # that: no rep chunk row, so the inner join drops the members too.
-    assert collapsed == direct
-    assert len(collapsed) > 0
-    n_null = sum(1 for r in direct if r[1] is None)
-    assert n_null == 0
+    per_id = _by_id(chunk_documents(dup_docs, chunk_tokens=8, overlap=2))
+    # NULL-text docs produce NO chunks (explode of a NULL index range
+    # drops the row)
+    assert len(per_id) == 160 and _NULL_ID not in per_id
+    _assert_replicas_match_base(per_id)
 
 
-def test_bloom_dedup_collapse_parity(spark, dup_docs):
+def test_bloom_dedup_on_replicated_corpus(spark, dup_docs):
     from gcpde_spark.llm.dedup import bloom_dedup_new
 
-    # plant NOVEL texts (replicated, new-side only) so the parity covers
-    # non-empty output — on the replica corpus every text of `new` also
-    # exists in `old` and the result would be vacuously empty
+    # plant NOVEL texts (replicated, new-side only): every base text of
+    # `new` also exists in `old` (its 4 replica ids cover every residue
+    # mod 3), so only the planted texts are novel
     novel = spark.createDataFrame(
         [(500000 + i, f"novel text number {i % 5} planted only in new")
          for i in range(15)],
@@ -3712,17 +3697,19 @@ def test_bloom_dedup_collapse_parity(spark, dup_docs):
     )
     new = dup_docs.where(F.col("doc_id") % 3 == 0).unionByName(novel)
     old = dup_docs.where(F.col("doc_id") % 3 != 0)
-    for exact in (False, True):
-        direct = _rows(
-            bloom_dedup_new(new, old, exact=exact, dedup_collapse=False)
-        )
-        collapsed = _rows(
-            bloom_dedup_new(new, old, exact=exact, dedup_collapse=True)
-        )
-        # a Bloom bitmap is a bit_or fold — duplicate keys contribute
-        # nothing, so the distinct-text build is bit-identical and the
-        # flag/rescue decisions agree row for row
-        assert collapsed == direct
+    novel_ids = {r["doc_id"] for r in novel.collect()}
+    exact_ids = {r["doc_id"] for r in bloom_dedup_new(new, old, exact=True).collect()}
+    # exact: precisely the anti-join on the normalized fingerprint; the
+    # NULL-text row has a NULL fingerprint, which matches nothing in
+    # `old`, so it is novel
+    assert exact_ids == novel_ids | {_NULL_ID}
+    approx = bloom_dedup_new(new, old, exact=False).collect()
+    approx_ids = {r["doc_id"] for r in approx}
+    assert approx_ids <= exact_ids
+    # replicas share a fingerprint, so the filter keeps or drops all of them
+    text_of = {r["doc_id"]: r["text"] for r in new.collect()}
+    kept_texts = {text_of[i] for i in approx_ids}
+    assert approx_ids == {i for i in exact_ids if text_of[i] in kept_texts}
 
 
 @pytest.mark.parametrize("wide", [False, True])
@@ -3734,81 +3721,92 @@ def test_bm25_collapse_parity(dup_docs, wide):
     try:
         if wide:
             text_mod._BM25_WIDE_TERM_LIMIT = 2  # force the wide route
-        direct = _rows(
-            text_mod.bm25_topk(dup_docs, q, top_k=50, dedup_collapse=False)
-        )
-        collapsed = _rows(
-            text_mod.bm25_topk(dup_docs, q, top_k=50, dedup_collapse=True)
-        )
+        full = text_mod.bm25_topk(dup_docs, q, top_k=1000).collect()
+        top = text_mod.bm25_topk(dup_docs, q, top_k=50).collect()
     finally:
         text_mod._BM25_WIDE_TERM_LIMIT = limit0
-    # (dl, tf) per doc is a pure text function and the member fan-out
-    # happens BEFORE the corpus stats, so N/total/df/idf — and every
-    # quantized score — are identical on both routes
-    assert collapsed == direct
-    assert len(collapsed) == 50
+    score = {r["doc_id"]: r["bm25"] for r in full}
+    # every matching replica scores exactly as its base id
+    assert _NULL_ID not in score
+    for i, v in score.items():
+        assert score.get(_base_id(i)) == v, (i, v)
+    # the top 50 carry the 50 best scores of the full ranking
+    assert len(top) == 50
+    assert sorted((r["bm25"] for r in top), reverse=True) == sorted(
+        score.values(), reverse=True
+    )[:50]
+    assert all(score[r["doc_id"]] == r["bm25"] for r in top)
+
+
+def _assert_entry_matches_oracle_on_replicas(spark, tmp_path, entry):
+    """Build ``entry`` over a documents table holding 4 copies of the
+    oracle corpus (ids shifted) and compare it with its DuckDB oracle
+    over the same file."""
+    import duckdb
+
+    from gcpde_spark.queries import CORPUS
+    from tests.conftest import SF_ORACLE
+    from tests.test_corpus import canon_rows, values_equal
+
+    src = f"{SF_ORACLE}/documents.parquet"
+    con = duckdb.connect()
+    try:
+        con.sql(
+            "COPY (" + " UNION ALL ".join(
+                f"SELECT * REPLACE (doc_id + {k * 10_000_000} AS doc_id) "
+                f"FROM '{src}'"
+                for k in range(4)
+            ) + f") TO '{tmp_path}/documents.parquet' (FORMAT parquet)"
+        )
+        con.sql(
+            f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+        )
+        ores = con.sql(CORPUS[entry].oracle)
+        ocols, orows = ores.columns, ores.fetchall()
+    finally:
+        con.close()
+    sdf = CORPUS[entry].build(spark, str(tmp_path))
+    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows) > 0
+    s_canon, o_canon = canon_rows(scols, srows), canon_rows(ocols, orows)
+    assert all(
+        all(values_equal(x, y) for x, y in zip(a, b))
+        for a, b in zip(s_canon, o_canon)
+    )
 
 
 @pytest.mark.parametrize("entry", ["l38_snapshot_diff", "l39_vocab_novelty"])
-def test_snapshot_entries_collapse_parity(spark, entry):
-    # builder-level routes: force the collapse on the replica-free
-    # oracle corpus (threshold 0) vs the direct path (threshold inf) —
-    # values must agree on ANY corpus, not just replica-heavy ones
-    import gcpde_spark.llm.text as text_mod
-    from gcpde_spark.queries import CORPUS
-    from tests.conftest import SF_ORACLE
-
-    ratio0 = text_mod.DUP_COLLAPSE_RATIO
-    try:
-        text_mod.DUP_COLLAPSE_RATIO = float("inf")
-        direct = _rows(CORPUS[entry].build(spark, SF_ORACLE))
-        text_mod.DUP_COLLAPSE_RATIO = 0.0
-        collapsed = _rows(CORPUS[entry].build(spark, SF_ORACLE))
-    finally:
-        text_mod.DUP_COLLAPSE_RATIO = ratio0
-    assert collapsed == direct
-    assert len(collapsed) > 0
+def test_snapshot_entries_collapse_parity(spark, tmp_path, entry):
+    _assert_entry_matches_oracle_on_replicas(spark, tmp_path, entry)
 
 
 def test_dedup_clusters_collapse_parity(dup_docs):
     from gcpde_spark.llm.dedup import dedup_clusters, minhash_near_dup_pairs
 
     pairs = minhash_near_dup_pairs(
-        dup_docs, "doc_id", num_hashes=32, bands=8, threshold=0.5,
-        dedup_collapse=False,
+        dup_docs, "doc_id", num_hashes=32, bands=8, threshold=0.5
     )
-    direct = _rows(
-        dedup_clusters(dup_docs, "doc_id", pairs=pairs, dedup_collapse=False)
-    )
-    collapsed = _rows(
-        dedup_clusters(dup_docs, "doc_id", pairs=pairs, dedup_collapse=True)
-    )
-    # quotient-graph CC: contracting same-text groups (rep = group min
-    # id) before min-label propagation yields the same (id, component,
-    # keep) rows — incl. the NULL-text row (no fingerprint group; keeps
-    # itself on both routes)
-    assert collapsed == direct
-    # the planted 4x replicas must actually cluster
-    comps = {}
-    for r in collapsed:
-        comps.setdefault(r[0], []).append(r)
-    assert any(len(v) >= 4 for v in comps.values())
+    rows = dedup_clusters(dup_docs, "doc_id", pairs=pairs).collect()
+    comp = {r["doc_id"]: r["component"] for r in rows}
+    keep = {r["doc_id"]: r["keep"] for r in rows}
+    assert len(rows) == len(comp) == 161
+    # every replica clusters with its base text; the label is the
+    # smallest member id, which is the one row kept
+    members = {}
+    for i, c in comp.items():
+        assert comp[_base_id(i)] == c, i
+        members.setdefault(c, []).append(i)
+    for c, ids in members.items():
+        assert c == min(ids)
+        assert [i for i in ids if keep[i]] == [c]
+    # the planted 4x replicas actually cluster
+    assert all(len(v) >= 4 for c, v in members.items() if c != _NULL_ID)
+    # the NULL-text row has no pairs and keeps itself
+    assert members[_NULL_ID] == [_NULL_ID] and keep[_NULL_ID]
 
 
-def test_dup_cluster_sizes_collapse_parity(spark):
-    import gcpde_spark.llm.text as text_mod
-    from gcpde_spark.queries import CORPUS
-    from tests.conftest import SF_ORACLE
-
-    ratio0 = text_mod.DUP_COLLAPSE_RATIO
-    try:
-        text_mod.DUP_COLLAPSE_RATIO = float("inf")
-        direct = _rows(CORPUS["l37_dup_cluster_sizes"].build(spark, SF_ORACLE))
-        text_mod.DUP_COLLAPSE_RATIO = 0.0
-        collapsed = _rows(
-            CORPUS["l37_dup_cluster_sizes"].build(spark, SF_ORACLE)
-        )
-    finally:
-        text_mod.DUP_COLLAPSE_RATIO = ratio0
-    assert collapsed == direct
-    assert len(collapsed) > 0
+def test_dup_cluster_sizes_collapse_parity(spark, tmp_path):
+    _assert_entry_matches_oracle_on_replicas(
+        spark, tmp_path, "l37_dup_cluster_sizes"
+    )

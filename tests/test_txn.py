@@ -52,6 +52,37 @@ def test_merge_updates_inserts_and_time_travel(spark, tmp_path):
     assert old[3] == "3" and 99 not in old and len(old) == 10
 
 
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_merge_guards_duplicate_keys_outside_every_file_range(
+    spark, tmp_path, strategy
+):
+    """A delta no file's key range overlaps is a pure insert; MERGE's
+    duplicate-key guard applies to it as to any other delta."""
+    t = _mk(spark, tmp_path / "t", n=10)
+    dup = spark.createDataFrame([(100, "a"), (100, "b")], "id long, v string")
+    with pytest.raises(Exception, match="merge source has duplicate keys"):
+        t.merge(dup, strategy=strategy)
+    assert t.version() == 0
+    t.merge(dup, strategy=strategy, on_duplicate_keys="keep")
+    got = sorted((r.id, r.v) for r in t.read().where("id = 100").collect())
+    assert got == [(100, "a"), (100, "b")]
+    assert t.read().count() == 12
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_merge_null_keys_are_never_duplicates(spark, tmp_path, strategy):
+    """NULL keys match no stored row, so NULL-keyed source rows insert
+    on every path, also when a non-null sibling touches a file."""
+    t = _mk(spark, tmp_path / "t", n=10)
+    delta = spark.createDataFrame(
+        [(None, "n1"), (None, "n2"), (3, "UPD")], "id long, v string"
+    )
+    t.merge(delta, strategy=strategy)
+    rows = t.read().collect()
+    assert sorted(r.v for r in rows if r.id is None) == ["n1", "n2"]
+    assert {r.v for r in rows if r.id == 3} == {"UPD"} and len(rows) == 12
+
+
 def test_merge_rewrites_only_overlapping_files(spark, tmp_path):
     """The scale contract: a 1-key delta into a key-sorted table must
     rewrite only the file(s) whose key range covers it — every other
