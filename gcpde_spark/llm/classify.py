@@ -31,8 +31,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from gcpde_spark.llm.text import round4, spread, tokens
+from gcpde_spark.records import records_to_dataframe
 
 DEFAULT_BUCKETS = 1 << 20
 
@@ -53,8 +55,11 @@ def classifier_weights(
     semantics (collisions are part of the model, not an error)."""
     if not term_weights:
         raise ValueError("term_weights must be non-empty")
-    rows = [(t, float(w)) for t, w in term_weights.items()]
-    raw = spark.createDataFrame(rows, "term string, weight double")
+    raw = records_to_dataframe(
+        spark,
+        [{"term": t, "weight": float(w)} for t, w in term_weights.items()],
+        StructType([StructField("term", StringType()), StructField("weight", DoubleType())]),
+    )
     return (
         raw.select(
             _bucket(F.col("term"), n_buckets).alias("bucket"),

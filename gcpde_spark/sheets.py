@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from gcpde_spark.errors import EngineException
+from gcpde_spark.records import records_to_dataframe
 
 
 class WorksheetNotFound(EngineException):
@@ -291,8 +292,7 @@ class SheetStore:
                 if k not in columns:
                     columns.append(k)
         schema = StructType([StructField(c, StringType(), True) for c in columns])
-        rows = [tuple(rec.get(c) for c in columns) for rec in records]
-        return self.spark.createDataFrame(rows, schema)
+        return records_to_dataframe(self.spark, records, schema)
 
     # -- H3/H4: writes -------------------------------------------------------
 

@@ -673,11 +673,23 @@ class TableStore:
         self.replace_table_df(dataset, table, merged)
 
     def _partition_columns(self, dataset: str, table: str) -> list[str]:
-        return [
-            c.name
-            for c in self.spark.catalog.listColumns(f"{dataset}.{table}")
-            if c.isPartition
+        """The table's partition columns in partition order, read from
+        the ``# Partition Information`` block of ``DESCRIBE TABLE`` — a
+        catalog command that runs no Spark job (``catalog.listColumns``
+        runs one per partition of its result)."""
+        names = [
+            r.col_name
+            for r in self.spark.sql(f"DESCRIBE TABLE `{dataset}`.`{table}`").collect()
         ]
+        if "# Partition Information" not in names:
+            return []
+        block = names[names.index("# Partition Information") + 2 :]  # past "# col_name"
+        out: list[str] = []
+        for name in block:
+            if not name or name.startswith("#"):
+                break
+            out.append(name)
+        return out
 
     def upsert_table_df_partitioned(
         self, dataset: str, table: str, source: DataFrame, key_field: str

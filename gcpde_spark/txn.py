@@ -72,6 +72,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from gcpde_spark.commit_backend import CommitBackend, PosixLinkBackend
 from gcpde_spark.errors import ConcurrentCommitError as _ConcurrentCommitError
 from gcpde_spark.errors import SchemaMismatchException
+from gcpde_spark.records import records_to_dataframe
 from gcpde_spark.tables import MergeIntoBackend, merge_dataframes
 
 _LOG_DIR = "_txn_log"
@@ -829,7 +830,7 @@ class TxnTable:
                     else []
                 )
             )
-            return self.spark.createDataFrame([], out_schema)
+            return records_to_dataframe(self.spark, [], out_schema)
         # files store immutable PHYSICAL birth names; read by those and
         # surface the manifest's logical names at the END — the whole
         # of metadata-only rename is one projection, applied after the
@@ -1198,7 +1199,7 @@ class TxnTable:
             # merge_dataframes installs on a rewrite (merging into an
             # empty target), so no path drifts on MERGE's error semantics
             guard=lambda r: merge_dataframes(
-                self.spark.createDataFrame([], schema),
+                records_to_dataframe(self.spark, [], schema),
                 r,
                 keys,
                 on_duplicate_keys=on_duplicate_keys,
@@ -1867,7 +1868,7 @@ class TxnTable:
         if not parts:
             m = self._manifest(end)
             schema = _schema_of(m)
-            empty = self.spark.createDataFrame([], schema)
+            empty = records_to_dataframe(self.spark, [], schema)
             return empty.select(
                 "*",
                 F.lit("upsert").alias("_change_type"),

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from gcpde_spark.records import records_to_dataframe
 from gcpde_spark.txn import (
     ConcurrentCommitError,
     NonAdditiveBoundaryError,
@@ -344,7 +345,7 @@ class MaterializedAggView:
     def _empty_feed(self) -> DataFrame:
         vschema = self.table.read(version=None).schema
         return (
-            self.spark.createDataFrame([], vschema)
+            records_to_dataframe(self.spark, [], vschema)
             .withColumn("_change_type", F.lit("update_postimage"))
             .withColumn("_commit_version", F.lit(0).cast("int"))
             .limit(0)

@@ -357,6 +357,21 @@ def test_partition_scoped_upsert_unpartitioned_falls_back(store, spark):
     assert got == {(1, "A"), (2, "b")}
 
 
+def test_partition_columns_come_from_describe_without_jobs(store, spark):
+    """Partition columns in partition order (not schema order), read
+    from DESCRIBE TABLE: no Spark job, unlike catalog.listColumns."""
+    from tests.test_txn import _job_ids
+
+    store._ensure_database("ds")
+    spark.createDataFrame(
+        [(1, "a", "d1", 3)], "id long, v string, day string, h int"
+    ).write.partitionBy("h", "day").format("parquet").saveAsTable("ds.pc")
+    store.create_table_from_records("ds", "u", [{"id": 1, "v": "a"}])
+    cols, jobs = _job_ids(spark, lambda: store._partition_columns("ds", "pc"))
+    assert cols == ["h", "day"] and jobs == []
+    assert store._partition_columns("ds", "u") == []
+
+
 def test_merge_guard_survives_column_projection(spark):
     """The duplicate-key guard is a filter, so projecting away any column
     cannot let Catalyst prune it (round-3 ADVICE: the round-2 guard rode
